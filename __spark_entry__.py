@@ -64,9 +64,9 @@ def _collect(attr: str) -> dict:
 
 def entry(spark: SparkSession) -> DataFrame:
     """Flagship query on /root/testdata/sf0.001; driver checks rows>0."""
-    from postgres_s3_etl_spark.operators.etl import best_performing_product
+    from postgres_s3_etl_spark.operators.etl import QUERIES
 
-    return best_performing_product(spark, "/root/testdata/sf0.001")
+    return QUERIES["etl_best_performing_product"](spark, "/root/testdata/sf0.001")
 
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:

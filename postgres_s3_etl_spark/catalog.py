@@ -3,9 +3,8 @@
 The reference keeps staging tables in Postgres schemas
 (``yazejibi2622_staging.*``, reference scripts/create_tables.py:19-53)
 and shared dims in ``if_common.*``. Here the catalog is a thin layer
-over parquet directories: ``load_tables`` reads every known table
-lazily (no action is triggered) and optionally registers temp views
-so operators can be written in SQL as well as the DataFrame API.
+over parquet directories: ``load_table`` reads one table lazily (no
+action is triggered) and fails on a table that does not exist.
 """
 
 from __future__ import annotations
@@ -36,9 +35,6 @@ TABLES: tuple[str, ...] = (
 #: audit_broadcast_hints.py): hints on them may ride only
 #: aggregate/limit-reduced subtrees; otherwise AQE decides.
 DIM_TABLES: frozenset[str] = frozenset({"region", "nation"})
-
-DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-
 
 def table_path(sf_dir: str, name: str) -> str:
     return os.path.join(sf_dir, f"{name}.parquet")
@@ -164,22 +160,3 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
         elif dt == "timestamp":
             df = df.withColumn("ts", F.col("ts").cast("timestamp_ntz"))
     return df
-
-
-def load_tables(
-    spark: SparkSession,
-    sf_dir: str = DEFAULT_SF_DIR,
-    names: tuple[str, ...] = TABLES,
-    register_views: bool = False,
-) -> dict[str, DataFrame]:
-    """Read all tables under ``sf_dir``; optionally register temp views."""
-    out: dict[str, DataFrame] = {}
-    for name in names:
-        path = table_path(sf_dir, name)
-        if not os.path.exists(path):
-            continue
-        df = load_table(spark, sf_dir, name)
-        if register_views:
-            df.createOrReplaceTempView(name)
-        out[name] = df
-    return out

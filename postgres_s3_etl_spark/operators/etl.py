@@ -9,6 +9,11 @@ the driver's TPC-H-ish testdata:
     part                ≈ if_common.dim_products
     derived holiday rule≈ if_common.dim_dates (see functions/dates.py)
 
+Each transform is a function of its input frames, which ``INPUTS``
+names. The reference DAGs (plans/etl_dags.py) and the ``etl_*``
+oracle queries both read those frames with ``load_inputs`` and call
+the same transform.
+
 Design notes (scale):
 - Pivots are single-pass conditional aggregates — one shuffle, no
   per-month scans (the reference's ``SUM(CASE WHEN month=k…)`` shape
@@ -29,6 +34,8 @@ compares clean.
 
 from __future__ import annotations
 
+from collections.abc import Callable
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -48,9 +55,7 @@ _MONTHS = (
 )
 
 
-def agg_public_holiday(
-    spark: SparkSession, sf_dir: str, run_date: str = INGESTION_DATE
-) -> DataFrame:
+def agg_public_holiday(orders: DataFrame, run_date: str = INGESTION_DATE) -> DataFrame:
     """Month-pivoted count of orders placed on public holidays.
 
     Mirrors reference airflow/dags/orders_ETL.py:93-125 (CTE_1 join
@@ -59,7 +64,6 @@ def agg_public_holiday(
     per month — a single scan + single-row reduce, no joins needed
     because the calendar attributes are derivable from the date.
     """
-    orders = load_table(spark, sf_dir, "orders")
     hol = orders.where(is_public_holiday(F.col("o_orderdate")))
     month = F.month("o_orderdate")
     aggs = [
@@ -74,7 +78,7 @@ def agg_public_holiday(
 
 
 def agg_shipments(
-    spark: SparkSession, sf_dir: str, run_date: str = INGESTION_DATE
+    orders: DataFrame, lineitem: DataFrame, run_date: str = INGESTION_DATE
 ) -> DataFrame:
     """Late / undelivered shipment counts.
 
@@ -85,12 +89,8 @@ def agg_shipments(
     late = shipped ≥ 6 days after order; undelivered = shipped > 30
     days after order.
     """
-    orders = load_table(spark, sf_dir, "orders").select(
-        "o_orderkey", "o_orderdate"
-    )
-    lineitem = load_table(spark, sf_dir, "lineitem").select(
-        "l_orderkey", "l_shipdate"
-    )
+    orders = orders.select("o_orderkey", "o_orderdate")
+    lineitem = lineitem.select("l_orderkey", "l_shipdate")
     lag = ship_lag_days(F.col("l_shipdate"), F.col("o_orderdate"))
     joined = lineitem.join(
         orders, lineitem.l_orderkey == orders.o_orderkey, "inner"
@@ -107,7 +107,10 @@ def agg_shipments(
 
 
 def best_performing_product(
-    spark: SparkSession, sf_dir: str, run_date: str = INGESTION_DATE
+    orders: DataFrame,
+    lineitem: DataFrame,
+    part: DataFrame,
+    run_date: str = INGESTION_DATE,
 ) -> DataFrame:
     """Top product by average rating, with its rating distribution,
     shipment punctuality and most-ordered day.
@@ -120,21 +123,19 @@ def best_performing_product(
 
     Plan shape: one fact-fact join (lineitem ⋈ orders), broadcast dim
     join (part), ONE groupBy for all per-product stats, a 1-row
-    sort-limit for the winner (persisted — one row — so every
-    consumer reuses the aggregation instead of re-running the fact
-    join), then the winner's per-day order counts from a SECOND pass
-    that broadcast-joins the winner key into lineitem BEFORE touching
-    orders — at scale that pass reads one product's lines, not the
-    whole fact table. No window over the full fact table; the only
-    full shuffle is the product groupBy.
+    sort-limit for the winner, then the winner's per-day order counts
+    from a SECOND pass that broadcast-joins the winner row into
+    lineitem BEFORE touching orders — at scale that pass reads one
+    product's lines, not the whole fact table. The winner is consumed
+    only there, so the aggregation runs once with nothing cached. No
+    window over the full fact table; the only full shuffle is the
+    product groupBy.
     """
-    orders = load_table(spark, sf_dir, "orders").select(
-        "o_orderkey", "o_orderdate"
-    )
-    lineitem = load_table(spark, sf_dir, "lineitem").select(
+    orders = orders.select("o_orderkey", "o_orderdate")
+    lineitem = lineitem.select(
         "l_orderkey", "l_partkey", "l_linenumber", "l_shipdate"
     )
-    part = load_table(spark, sf_dir, "part").select("p_partkey", "p_name")
+    part = part.select("p_partkey", "p_name")
 
     rating = (F.col("l_linenumber") % 5 + 1).alias("rating")
     lag = ship_lag_days(F.col("l_shipdate"), F.col("o_orderdate"))
@@ -171,39 +172,28 @@ def best_performing_product(
             F.sum(F.when(F.col("ship_lag") >= 6, 1).otherwise(0)) * 100.0 / n, 4
         ).alias("pct_late_shipment"),
     )
-    top = (
-        prod_stats.orderBy(F.desc("avg_rating"), F.asc("p_partkey"))
-        .limit(1)
-        .persist()
-    )
+    top = prod_stats.orderBy(F.desc("avg_rating"), F.asc("p_partkey")).limit(1)
 
-    # Winner's most-ordered day: broadcast the 1-row winner key into
+    # Winner's most-ordered day: broadcast the 1-row winner into
     # lineitem FIRST, so this pass joins/aggregates only the winning
-    # product's lines instead of re-running the full fact join.
-    winner_lines = (
-        lineitem.join(
-            F.broadcast(top.select("p_partkey")),
-            lineitem.l_partkey == F.col("p_partkey"),
-        )
+    # product's lines instead of re-running the full fact join. The
+    # winner's stats ride along as group keys (constant over its
+    # lines), so ``top`` occurs once in the plan: the product
+    # aggregation runs once and nothing needs caching.
+    winner_day = (
+        lineitem.join(F.broadcast(top), lineitem.l_partkey == F.col("p_partkey"))
         .join(orders, lineitem.l_orderkey == orders.o_orderkey)
-        .select(F.to_date("o_orderdate").alias("order_day"), "l_orderkey")
-    )
-    day_counts = (
-        winner_lines.groupBy("order_day")
+        .groupBy(*top.columns, F.to_date("o_orderdate").alias("order_day"))
         .agg(F.countDistinct("l_orderkey").alias("n_orders"))
         .orderBy(F.desc("n_orders"), F.asc("order_day"))
         .limit(1)
-        .select(
-            F.col("order_day").alias("most_ordered_day"),
-            is_public_holiday(F.col("order_day")).alias("is_public_holiday"),
-        )
     )
 
-    return top.crossJoin(F.broadcast(day_counts)).select(
+    return winner_day.select(
         F.lit(run_date).cast("date").alias("ingestion_date"),
         F.col("p_name").alias("product_name"),
-        "most_ordered_day",
-        "is_public_holiday",
+        F.col("order_day").alias("most_ordered_day"),
+        is_public_holiday(F.col("order_day")).alias("is_public_holiday"),
         "tt_review_points",
         "pct_one_star_review",
         "pct_two_star_review",
@@ -305,8 +295,31 @@ ORACLES: dict[str, str] = {
     """,
 }
 
+#: Staged tables each transform reads, named as its parameters.
+INPUTS: dict[Callable[..., DataFrame], tuple[str, ...]] = {
+    agg_public_holiday: ("orders",),
+    agg_shipments: ("orders", "lineitem"),
+    best_performing_product: ("orders", "lineitem", "part"),
+}
+
+
+def load_inputs(
+    spark: SparkSession, sf_dir: str, transform: Callable[..., DataFrame]
+) -> dict[str, DataFrame]:
+    """Lazily read the staged tables ``transform`` takes, each once,
+    keyed by parameter name. A missing table raises."""
+    return {name: load_table(spark, sf_dir, name) for name in INPUTS[transform]}
+
+
+def _query(transform: Callable[..., DataFrame]):
+    def build(spark: SparkSession, sf_dir: str) -> DataFrame:
+        return transform(**load_inputs(spark, sf_dir, transform))
+
+    return build
+
+
 QUERIES = {
-    "etl_agg_public_holiday": agg_public_holiday,
-    "etl_agg_shipments": agg_shipments,
-    "etl_best_performing_product": best_performing_product,
+    "etl_agg_public_holiday": _query(agg_public_holiday),
+    "etl_agg_shipments": _query(agg_shipments),
+    "etl_best_performing_product": _query(best_performing_product),
 }

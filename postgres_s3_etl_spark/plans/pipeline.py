@@ -88,13 +88,13 @@ class Pipeline:
                 failed.add(name)
                 report.append(TaskRun(name, "skipped", 0, 0.0))
                 continue
-            t0 = time.time()
+            t0 = time.perf_counter()
             err: str | None = None
             for attempt in range(1, task.retries + 2):
                 try:
                     context[name] = task.fn(context)
                     report.append(
-                        TaskRun(name, "success", attempt, time.time() - t0)
+                        TaskRun(name, "success", attempt, time.perf_counter() - t0)
                     )
                     break
                 except Exception as exc:  # noqa: BLE001 — retry boundary
@@ -102,6 +102,8 @@ class Pipeline:
             else:
                 failed.add(name)
                 report.append(
-                    TaskRun(name, "failed", task.retries + 1, time.time() - t0, err)
+                    TaskRun(
+                        name, "failed", task.retries + 1, time.perf_counter() - t0, err
+                    )
                 )
         return report

@@ -13,9 +13,11 @@ exactly-once-per-logical-date without any resident scheduler.
 
 Scale note: the scheduler itself is driver-side metadata (dates and
 states — bytes); all heavy lifting stays inside the Pipeline's Spark
-plans. One backfill invocation runs logical dates sequentially so a
-shared SparkSession is never contended; parallel backfill across
-dates is a caller concern (one session each), not a library default.
+plans. One backfill invocation runs logical dates one after another;
+within a run, work may still share the session concurrently (the
+reference DAGs' ``run_all`` runs its three DAGs on one session, one
+thread each). Parallel backfill across dates is a caller concern
+(one session each), not a library default.
 """
 
 from __future__ import annotations

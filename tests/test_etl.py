@@ -18,9 +18,11 @@ def test_etl_matches_oracle(spark, duck, name):
 
 
 def test_agg_public_holiday_shape(spark):
-    from postgres_s3_etl_spark.operators.etl import agg_public_holiday
+    from postgres_s3_etl_spark.operators.etl import agg_public_holiday, load_inputs
 
-    df = agg_public_holiday(spark, "/root/testdata/sf0.001")
+    df = agg_public_holiday(
+        **load_inputs(spark, "/root/testdata/sf0.001", agg_public_holiday)
+    )
     rows = df.collect()
     assert len(rows) == 1
     assert len(df.columns) == 13  # ingestion_date + 12 months
@@ -30,9 +32,13 @@ def test_agg_public_holiday_shape(spark):
 
 
 def test_best_performing_product_single_row(spark):
-    from postgres_s3_etl_spark.operators.etl import best_performing_product
+    from postgres_s3_etl_spark.operators.etl import (
+        best_performing_product,
+        load_inputs,
+    )
 
-    row = best_performing_product(spark, "/root/testdata/sf0.001").collect()
+    frames = load_inputs(spark, "/root/testdata/sf0.001", best_performing_product)
+    row = best_performing_product(**frames).collect()
     assert len(row) == 1
     r = row[0]
     star_total = (

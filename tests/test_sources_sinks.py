@@ -30,11 +30,11 @@ def test_csv_roundtrip(spark, tmp_path):
 
 
 def test_single_file_csv_export(spark, tmp_path):
-    from postgres_s3_etl_spark.operators.etl import agg_shipments
+    from postgres_s3_etl_spark.operators.etl import QUERIES
     from postgres_s3_etl_spark.sinks.files import export_csv
 
     dest = str(tmp_path / "exports" / "agg_shipments.csv")
-    export_csv(agg_shipments(spark, SF_DIR), dest)
+    export_csv(QUERIES["etl_agg_shipments"](spark, SF_DIR), dest)
     with open(dest) as f:
         lines = f.read().strip().splitlines()
     assert lines[0] == "ingestion_date,tt_late_shipments,tt_undelivered_items"
