@@ -35,6 +35,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from postgres_s3_etl_spark.catalog import load_table
+from postgres_s3_etl_spark.session import session_memoized
 
 #: PageRank damping and iteration count (fixed for oracle parity).
 PR_DAMPING = 0.85
@@ -101,27 +102,17 @@ def copurchase_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-#: Round-15 session-lifetime memo of the CHECKPOINTED co-purchase
-#: edge frame, keyed (application, sf_dir) — the tokenizer
-#: _TRAIN_CACHE rationale applied to the graph family: ten headline
-#: graph queries each rebuilt + re-checkpointed the identical edge
-#: list (~2-2.5 s each at sf0.1), and a suite pass paid it ten
-#: times. localCheckpoint blocks survive spark.catalog.clearCache()
-#: and live for the application the key carries, so a new session
-#: never sees stale frames. bench.py restores this memo cold per
-#: rep (the round-9 cold-memo protocol), so standing numbers price
-#: the build exactly as the driver's single pass does: the first
-#: graph query in suite order pays it, later ones reuse it.
-_EDGE_CACHE: dict[tuple[str, str], DataFrame] = {}
-
-
+#: Round-15: memoized per sf_dir in the shared session memo (the
+#: tokenizer _train_merges rationale): ten headline graph queries
+#: each rebuilt + re-checkpointed this edge list (~2-2.5 s each at
+#: sf0.1). localCheckpoint blocks survive clearCache() and live for
+#: the application. bench.py restores the shared memo cold per rep
+#: (the round-9 cold-memo protocol), so standing numbers price the
+#: build as the driver's single pass does: the first graph query in
+#: suite order pays it, later ones reuse it.
+@session_memoized
 def _edges_ckpt(spark: SparkSession, sf_dir: str) -> DataFrame:
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key not in _EDGE_CACHE:
-        _EDGE_CACHE[key] = copurchase_edges(
-            spark, sf_dir
-        ).localCheckpoint()
-    return _EDGE_CACHE[key]
+    return copurchase_edges(spark, sf_dir).localCheckpoint()
 
 
 _EDGES_SQL = """

@@ -24,6 +24,7 @@ from pyspark.sql import functions as F
 
 from postgres_s3_etl_spark.catalog import load_table, table_row_count
 from postgres_s3_etl_spark.operators.ranking import GN, GRN, with_global_order
+from postgres_s3_etl_spark.session import session_memoized
 
 N_PROBES = 10  # probe set: vec_id < 10
 TOP_K = 5
@@ -2711,14 +2712,12 @@ def _hnsw_cos6(lv: str, ln: str, rv: str, rn_: str) -> Column:
     )
 
 
-#: Session-lifetime graph-index memo keyed (session, sf_dir) — the
-#: build is the expensive one-time index step shared by the hnsw
-#: query op and the recall sweep (bench.py restores this to its
-#: per-query first-rep state between reps, the round-10 cold-memo
-#: protocol, so standing rows still price the real build).
-_HNSW_CACHE: dict = {}
-
-
+#: Memoized per sf_dir in the shared session memo — the build is the
+#: expensive one-time index step shared by the hnsw query op and the
+#: recall sweep (bench.py restores the shared memo to its per-query
+#: first-rep state between reps, the round-10 cold-memo protocol, so
+#: standing rows still price the real build).
+@session_memoized
 def _hnsw_graph(
     spark: SparkSession, sf_dir: str
 ) -> tuple[DataFrame, DataFrame]:
@@ -2737,9 +2736,6 @@ def _hnsw_graph(
     an equi-join on it (sharded-graph serving: each shard holds a
     src-range plus its out-edges; beams route by node id).
     """
-    key = (spark, sf_dir)
-    if key in _HNSW_CACHE:
-        return _HNSW_CACHE[key]
     ranked = _hnsw_ranked(spark, sf_dir).localCheckpoint()
     bits = adaptive_graph_bits(table_row_count(sf_dir, "embeddings"))
     sig = ranked.withColumn("sig", _signature("v", DEDUP_SIG_PLANES))
@@ -2857,7 +2853,6 @@ def _hnsw_graph(
         .distinct()
         .localCheckpoint()  # final index, probed once per hop
     )
-    _HNSW_CACHE[key] = (adj, ranked)
     return adj, ranked
 
 

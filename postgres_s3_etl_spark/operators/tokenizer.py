@@ -39,6 +39,7 @@ from pyspark.sql import functions as F
 
 from postgres_s3_etl_spark.catalog import load_table
 from postgres_s3_etl_spark.operators.text_analysis import _ws_tokens
+from postgres_s3_etl_spark.session import session_memoized
 
 #: Symbol sentinel. Each symbol is stored as \x01sym\x01 so literal
 #: string replace of a sentinel-wrapped pair can never match across
@@ -81,17 +82,13 @@ def _word_vocab(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-#: Trained-merge memo keyed by (Spark application, sf_dir,
-#: track_curve): the four BPE-family operators each need the trained
-#: state, and without the memo a bench run covering the family
-#: re-runs the full 12-round merge loop (12 shuffles + collects)
-#: FOUR times (round-8 ADVICE). The vocab frame is localCheckpointed,
-#: so it stays valid for the lifetime of the application the key
-#: carries; a new session (new applicationId) never sees stale
-#: entries.
-_TRAIN_CACHE: dict[tuple[str, str, bool], tuple] = {}
-
-
+#: Memoized per (sf_dir, track_curve) in the shared session memo:
+#: the four BPE-family operators each need the trained state, and
+#: without the memo a bench run covering the family re-runs the full
+#: 12-round merge loop (12 shuffles + collects) FOUR times (round-8
+#: ADVICE). The vocab frame is localCheckpointed, so it stays valid
+#: for the lifetime of the application the memo keys it by.
+@session_memoized
 def _train_merges(
     spark: SparkSession, sf_dir: str, track_curve: bool = False
 ) -> tuple[
@@ -105,9 +102,6 @@ def _train_merges(
     replace. ``localCheckpoint`` per round truncates lineage so round
     N doesn't re-run rounds 1..N-1 (the iterative-kernel recipe).
     """
-    key = (spark.sparkContext.applicationId, sf_dir, track_curve)
-    if key in _TRAIN_CACHE:
-        return _TRAIN_CACHE[key]
     vocab = _word_vocab(spark, sf_dir).localCheckpoint()
     merges: list[tuple[int, str, str, int]] = []
     curve: list[tuple[int, int]] = []
@@ -140,7 +134,7 @@ def _train_merges(
         # Round-15 (guide §5): the per-round replace is a row-local
         # narrow op over the checkpointed word table, so materializing
         # EVERY round bought nothing — checkpoint every 4th round
-        # (and the last, which the _TRAIN_CACHE consumers reuse).
+        # (and the last, which the memo's consumers reuse).
         # The next round's pair rollup re-applies at most 3 chained
         # string replaces, far cheaper than a materialization job
         # (interleaved A/B at sf0.1, merges asserted identical:
@@ -156,7 +150,6 @@ def _train_merges(
                 .alias("o")
             ).collect()[0]["o"]
             curve.append((rnd, int(occ)))
-    _TRAIN_CACHE[key] = (vocab, merges, curve)
     return vocab, merges, curve
 
 

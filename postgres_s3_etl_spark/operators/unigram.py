@@ -44,6 +44,7 @@ from pyspark.sql import functions as F
 
 from postgres_s3_etl_spark.catalog import load_table
 from postgres_s3_etl_spark.operators.text_analysis import _ws_tokens
+from postgres_s3_etl_spark.session import session_memoized
 
 #: Fixed EM rounds — unrolled verbatim in the DuckDB oracle.
 UNIGRAM_ROUNDS = 3
@@ -230,21 +231,15 @@ def _run_em(
     return inv, rounds
 
 
-#: Trained-inventory memo keyed by (application, sf_dir, split) —
-#: the train/vocab/heldout operators share one EM run per corpus
-#: instead of re-training (the tokenizer.py _TRAIN_CACHE rationale).
-#: Values are plain Python lists/tuples, session-lifetime safe.
-_EM_CACHE: dict[tuple[str, str, str | None], tuple] = {}
-
-
+#: Memoized per (sf_dir, split) in the shared session memo — the
+#: train/vocab/heldout operators share one EM run per corpus instead
+#: of re-training (the tokenizer.py _train_merges rationale). Values
+#: are plain Python lists/tuples, session-lifetime safe.
+@session_memoized
 def _trained(
     spark: SparkSession, sf_dir: str, split: str | None = None
 ) -> tuple[list[tuple[str, int]], list[tuple]]:
-    key = (spark.sparkContext.applicationId, sf_dir, split)
-    if key not in _EM_CACHE:
-        words = _word_freq(spark, sf_dir, split).localCheckpoint()
-        _EM_CACHE[key] = _run_em(words)
-    return _EM_CACHE[key]
+    return _run_em(_word_freq(spark, sf_dir, split).localCheckpoint())
 
 
 _TRAIN_SCHEMA = (
@@ -390,11 +385,13 @@ def text_unigram_lm_heldout(
     floor-truncated doubles.
     """
     inv, rounds = _trained(spark, sf_dir, "train")
+    if not rounds:
+        return spark.createDataFrame([], _HELDOUT_SCHEMA)
     # Round-15 (guide §1.2/§5): checkpoint the held-out word table —
     # the emptiness probe and the scoring aggregate previously each
     # re-ran the corpus scan + tokenize + groupBy from scratch.
     hw = _word_freq(spark, sf_dir, "heldout").localCheckpoint()
-    if not rounds or not hw.take(1):
+    if not hw.take(1):
         return spark.createDataFrame([], _HELDOUT_SCHEMA)
     total = sum(c for _, c in inv)
     # Round-15: ONE pass instead of two — the old `base` aggregate

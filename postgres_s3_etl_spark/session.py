@@ -10,9 +10,15 @@ sized to the environment rather than Spark's legacy default of 200.
 
 from __future__ import annotations
 
+import functools
 import os
+import threading
+from collections.abc import Callable, Hashable
+from typing import Any, TypeVar
 
 from pyspark.sql import SparkSession
+
+T = TypeVar("T")
 
 #: Configs that are correct at every scale. Cluster deploys override
 #: shuffle partitions / memory via spark-submit; nothing here pins us
@@ -85,3 +91,61 @@ def get_spark(
     for k, v in conf.items():
         builder = builder.config(k, v)
     return builder.getOrCreate()
+
+
+class SessionMemo:
+    """Get-or-build memo for state that the queries of one Spark
+    application share. Entries are keyed ``(applicationId, key)``;
+    each key is built at most once, even when threads ask together.
+    Locks are per key, so builds of other keys and nested calls never
+    wait. A build that raises leaves no entry. The first call from a
+    new application drops the earlier one's entries."""
+
+    def __init__(self) -> None:
+        self._lock = threading.Lock()  # guards the three fields below
+        self._app: str | None = None
+        self._entries: dict[tuple[str, Hashable], Any] = {}
+        self._key_locks: dict[tuple[str, Hashable], threading.Lock] = {}
+
+    def get(
+        self, spark: SparkSession, key: Hashable, build: Callable[[], T]
+    ) -> T:
+        full = (spark.sparkContext.applicationId, key)
+        with self._lock:
+            if full[0] != self._app:
+                self._app, self._entries, self._key_locks = full[0], {}, {}
+            key_lock = self._key_locks.setdefault(full, threading.Lock())
+        with key_lock:
+            with self._lock:
+                if full in self._entries:
+                    return self._entries[full]
+            value = build()
+            with self._lock:
+                if full[0] == self._app:
+                    self._entries[full] = value
+            return value
+
+    def snapshot(self) -> dict[tuple[str, Hashable], Any]:
+        with self._lock:
+            return dict(self._entries)
+
+    def restore(self, snapshot: dict[tuple[str, Hashable], Any]) -> None:
+        """Keys built since ``snapshot`` are built again on next use."""
+        with self._lock:
+            self._entries = dict(snapshot)
+
+
+#: The memo that every ``session_memoized`` function shares.
+SESSION_MEMO = SessionMemo()
+
+
+def session_memoized(fn: Callable[..., T]) -> Callable[..., T]:
+    """Memoize ``fn(spark, ...)`` in ``SESSION_MEMO``, keyed by ``fn``
+    and the other arguments as passed."""
+
+    @functools.wraps(fn)
+    def memoized(spark: SparkSession, *args: Any, **kwargs: Any) -> T:
+        key = (fn, args, tuple(sorted(kwargs.items())))
+        return SESSION_MEMO.get(spark, key, lambda: fn(spark, *args, **kwargs))
+
+    return memoized

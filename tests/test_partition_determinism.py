@@ -38,10 +38,9 @@ TRAINERS = [
 
 
 def _clear_memos():
-    from postgres_s3_etl_spark.operators import tokenizer, unigram
+    from postgres_s3_etl_spark.session import SESSION_MEMO
 
-    tokenizer._TRAIN_CACHE.clear()
-    unigram._EM_CACHE.clear()
+    SESSION_MEMO.restore({})
 
 
 def _run(spark, name: str, shuffle: str, max_bytes: str):

@@ -1,12 +1,16 @@
 """Pipeline orchestration: Airflow-DAG parity (SURVEY.md §2.1/§3)."""
 
 import os
+import sys
 import threading
 import time
+from concurrent.futures import ThreadPoolExecutor
+from types import SimpleNamespace
 
 import pytest
 
 from postgres_s3_etl_spark.plans.pipeline import Pipeline, Task, TaskRun
+from postgres_s3_etl_spark.session import SessionMemo
 from tests.conftest import SF_DIR
 
 
@@ -215,3 +219,77 @@ def test_dag_run_date_parameterizes_ingestion(spark, tmp_path):
     # default stays the reproducible constant the oracles expect
     default_row = QUERIES["etl_agg_shipments"](spark, SF_DIR).collect()[0]
     assert str(default_row.ingestion_date) == "2024-01-01"
+
+
+# The session memo that DAG threads share. A fake session stands in
+# for Spark (only its applicationId is read); no build runs a job.
+def _session(app_id: str) -> SimpleNamespace:
+    return SimpleNamespace(sparkContext=SimpleNamespace(applicationId=app_id))
+
+
+def test_memo_builds_a_key_once_when_threads_ask_together():
+    memo, app, builds = SessionMemo(), _session("app-1"), []
+    start = threading.Barrier(8)
+
+    def ask(_):
+        start.wait(5)
+        return memo.get(
+            app, "k", lambda: builds.append(1) or time.sleep(0.05) or [1]
+        )
+
+    old = sys.getswitchinterval()
+    sys.setswitchinterval(1e-5)
+    try:
+        with ThreadPoolExecutor(8) as pool:
+            got = list(pool.map(ask, range(8), timeout=10))
+    finally:
+        sys.setswitchinterval(old)
+    assert len(builds) == 1 and all(g is got[0] for g in got)
+
+
+def test_memo_builds_of_other_keys_never_wait():
+    """While "a" builds, it makes a nested call for "b" and another
+    thread builds "c"."""
+    memo, app, out = SessionMemo(), _session("app-1"), {}
+    c_built = threading.Event()
+
+    def build_a():
+        threading.Thread(
+            target=memo.get, args=(app, "c", c_built.set), daemon=True
+        ).start()
+        return memo.get(app, "b", lambda: "b") + "a" * c_built.wait(5)
+
+    t = threading.Thread(
+        target=lambda: out.update(a=memo.get(app, "a", build_a)), daemon=True
+    )
+    t.start()
+    t.join(10)
+    assert not t.is_alive() and out == {"a": "ba"}
+
+
+def test_memo_new_application_rebuilds_and_drops_the_old_entries():
+    memo, builds = SessionMemo(), []
+    for app in ("app-1", "app-1", "app-2"):
+        memo.get(_session(app), "k", lambda: builds.append(app))
+    assert builds == ["app-1", "app-2"]
+    assert [app for app, _ in memo.snapshot()] == ["app-2"]
+
+
+def test_memo_restore_makes_the_next_call_rebuild():
+    """bench.py's cold-memo protocol: snapshot, build, restore."""
+    memo, app, builds = SessionMemo(), _session("app-1"), []
+    memo.get(app, "old", lambda: builds.append("old"))
+    snap = memo.snapshot()
+    memo.get(app, "new", lambda: builds.append("new"))
+    memo.restore(snap)
+    for key in ("new", "old"):
+        memo.get(app, key, lambda: builds.append(key))
+    assert builds == ["old", "new", "new"]
+
+
+def test_memo_failed_build_leaves_no_entry():
+    memo, app = SessionMemo(), _session("app-1")
+    with pytest.raises(ZeroDivisionError):
+        memo.get(app, "k", lambda: 1 // 0)
+    assert memo.snapshot() == {}
+    assert memo.get(app, "k", lambda: 7) == 7

@@ -131,8 +131,9 @@ def lossy_docs(spark, tmp_path):
 
 def test_bpe_roundtrip_accounts_every_lossy_class(spark, lossy_docs):
     from postgres_s3_etl_spark.operators import tokenizer
+    from postgres_s3_etl_spark.session import SESSION_MEMO
 
-    tokenizer._TRAIN_CACHE.clear()
+    snap = SESSION_MEMO.snapshot()
     try:
         rows = {
             r.source: r
@@ -141,7 +142,7 @@ def test_bpe_roundtrip_accounts_every_lossy_class(spark, lossy_docs):
             ).collect()
         }
     finally:
-        tokenizer._TRAIN_CACHE.clear()
+        SESSION_MEMO.restore(snap)
     clean, lossy = rows["clean"], rows["lossy"]
     # canonical fidelity is ALWAYS 1.0 — normalization-lossy docs
     # still reassemble to their canonical form

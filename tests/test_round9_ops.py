@@ -243,6 +243,22 @@ def test_unigram_heldout_accounting(spark):
     assert row.avg_nll > 0.0
 
 
+def test_unigram_heldout_untrained_never_builds_the_heldout_table(
+    spark, monkeypatch
+):
+    """An inventory with no EM rounds returns the empty frame before
+    paying the held-out corpus scan and groupBy."""
+    from postgres_s3_etl_spark.operators import unigram
+
+    monkeypatch.setattr(unigram, "_trained", lambda *a: ([], []))
+    monkeypatch.setattr(
+        unigram, "_word_freq", lambda *a: pytest.fail(f"built {a[2]} words")
+    )
+    out = unigram.text_unigram_lm_heldout(spark, SF_DIR)
+    empty = spark.createDataFrame([], unigram._HELDOUT_SCHEMA)
+    assert out.schema == empty.schema and out.collect() == []
+
+
 def test_unigram_heldout_planted_oov(spark, tmp_path):
     """A character that only ever appears in held-out docs makes
     those tokens OOV — the honest failure mode the op must count."""

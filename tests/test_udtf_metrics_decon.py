@@ -1,4 +1,4 @@
-"""Python UDTF twin, Observation metrics, decontamination ops."""
+"""Python UDTF twin, decontamination ops."""
 
 from pyspark.sql import functions as F
 
@@ -73,21 +73,3 @@ def test_udtf_chunker_matches_engine_chunker(spark):
     want = text_chunk(spark, SF_DIR).collect()
     assert {tuple(r) for r in got} == {tuple(r) for r in want} and len(got) > 0
 
-
-def test_observation_metrics_ride_along(spark):
-    from postgres_s3_etl_spark.catalog import load_table
-    from postgres_s3_etl_spark.functions.metrics import observe_counts
-
-    orders = load_table(spark, SF_DIR, "orders")
-    observed, obs = observe_counts(
-        orders, "load_audit", null_check_cols=("o_custkey",), sum_col="o_totalprice"
-    )
-    n = observed.count()  # the action that also computes the metrics
-    got = obs.get
-    assert got["n_rows"] == n
-    assert got["n_null_o_custkey"] == 0
-    exact = (
-        orders.agg(F.sum(F.col("o_totalprice").cast("decimal(18,2)")).cast("double"))
-        .collect()[0][0]
-    )
-    assert got["sum_o_totalprice"] == exact
