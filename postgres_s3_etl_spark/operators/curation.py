@@ -48,10 +48,8 @@ def text_curation_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
     (``doc_id % 50 == 0``, the standing benchmark stand-in) are not
     curated; they exist only as the decontamination reference.
     """
-    from postgres_s3_etl_spark.operators.dedup import (
-        min_label_fixed_point,
-        minhash_bands_for,
-    )
+    from postgres_s3_etl_spark.operators.dedup import minhash_bands_for
+    from postgres_s3_etl_spark.operators.graph import connected_components
     from postgres_s3_etl_spark.operators.text_analysis import (
         CAP_DOCS_PER_SOURCE,
         CAP_TOKENS_PER_SOURCE,
@@ -108,12 +106,15 @@ def text_curation_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
     sym = pairs.unionAll(
         pairs.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
     ).localCheckpoint()
-    # Exact-fixed-point propagation (shared with the split guard) —
-    # a fixed round count would silently split deep components at
-    # production scale.
-    labels = min_label_fixed_point(sym, "curation_funnel.stage3")
-    dropped3 = labels.where(F.col("doc") != F.col("label")).select(
-        F.col("doc").alias("doc_id")
+    # Exact-fixed-point components (shared with dedup and the split
+    # guard) — a fixed round count would silently split deep
+    # components at production scale.
+    try:
+        labels = connected_components(sym, "curation_funnel.stage3")
+    finally:  # labels are checkpointed: release the band frame
+        bands.unpersist()
+    dropped3 = labels.where(F.col("node") != F.col("label")).select(
+        F.col("node").alias("doc_id")
     )
     ids3 = (
         ids2.join(dropped3, "doc_id", "left_anti")

@@ -24,6 +24,7 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from postgres_s3_etl_spark.catalog import load_table, table_row_count
+from postgres_s3_etl_spark.operators.graph import connected_components
 from postgres_s3_etl_spark.operators.similarity import (
     lsh_bucket_cte,
     sig_cte_sql,
@@ -705,13 +706,13 @@ def dedup_cc_keepset(spark: SparkSession, sf_dir: str) -> DataFrame:
     This is the full shape of a production training-data dedup: LSH
     finds the near-dup graph, components group transitive duplicates,
     one representative (the min doc_id label) survives per group.
-    Label propagation is the standard distributed CC algorithm — each
-    round is one join + one min-aggregate over the EDGE nodes only
-    (a vanishing fraction of the corpus), ``localCheckpoint`` truncates
-    the growing lineage, and the loop stops when the monotonically
-    decreasing label sum reaches a fixed point (≤ graph diameter
-    rounds). The driver sees only a per-round scalar; all real work
-    stays distributed.
+    Label propagation (:func:`graph.connected_components`) is the
+    standard distributed CC algorithm — each round is one join + one
+    min-aggregate over the EDGE nodes only (a vanishing fraction of
+    the corpus), ``localCheckpoint`` truncates the growing lineage,
+    and the loop stops at the first round that changes no label
+    (at most diameter + 1 rounds). The driver sees only a per-round scalar;
+    all real work stays distributed.
     """
     docs = repartition_for_grouped_python(
         load_table(spark, sf_dir, "documents"), "doc_id"
@@ -730,11 +731,11 @@ def dedup_cc_keepset(spark: SparkSession, sf_dir: str) -> DataFrame:
         .distinct()
     )
     edges = pairs.union(pairs.select(F.col("dst"), F.col("src"))).persist()
-    # Shared exact-fixed-point propagation (round-11): the previous
-    # inline copy of this loop silently fell through after its round
-    # cap without convergence — partial labels would have flowed
-    # into the component sizes with no error.
-    labels = min_label_fixed_point(edges, "dedup_cc_keepset")
+    try:
+        labels = connected_components(edges, "dedup_cc_keepset")
+    finally:  # labels are checkpointed: release what built them
+        bands.unpersist()
+        edges.unpersist()
     comp_sizes = labels.groupBy("label").agg(F.count(F.lit(1)).alias("sz"))
     # Unfiltered corpus size — parquet footer metadata, not a scan.
     n_docs = table_row_count(sf_dir, "documents")
@@ -1212,66 +1213,6 @@ def dedup_lsh_bucket_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-#: Hard cap on min-label propagation for the fixed-point loop below —
-#: a diameter this large in a near-dup graph means the corpus itself
-#: is pathological; fail loud rather than silently under-cluster.
-CC_FIXED_POINT_CAP = 64
-
-
-def min_label_fixed_point(sym: DataFrame, what: str) -> DataFrame:
-    """Connected-component labels ``(doc, label)`` over a SYMMETRIC
-    edge frame ``sym(src, dst)`` by min-label propagation run to a
-    FIXED POINT, not a fixed round count.
-
-    Two propagation hops per convergence check (labels move 2 edges
-    per driver round-trip); the per-doc min label is monotonically
-    non-increasing, so the label SUM is strictly decreasing until the
-    exact closure is reached — an unchanged sum IS the fixed point.
-    The round-10 advisor flagged the previous fixed
-    ``FUZZY_CC_ROUNDS`` loops: at production scale (no oracle) a
-    component with propagation distance > 8 would silently split,
-    letting near-dup pairs straddle a train/eval boundary — the exact
-    leak the split guard exists to prevent. The checked scalar is one
-    driver round-trip over the PAIRED docs only (a vanishing fraction
-    of the corpus); everything else stays distributed.
-
-    Raises ``RuntimeError`` if ``CC_FIXED_POINT_CAP`` hop-pairs do not
-    converge (never silently returns partial clusters).
-    """
-    labels = (
-        sym.select(F.col("src").alias("doc"))
-        .distinct()
-        .select("doc", F.col("doc").alias("label"))
-        .localCheckpoint()
-    )
-
-    def _hop(lbls: DataFrame) -> DataFrame:
-        nb = (
-            sym.join(lbls, sym.src == lbls.doc)
-            .groupBy(F.col("dst").alias("doc2"))
-            .agg(F.min("label").alias("nl"))
-        )
-        return lbls.join(nb, lbls.doc == nb.doc2, "left").select(
-            "doc",
-            F.least(F.col("label"), F.coalesce("nl", F.col("label"))).alias(
-                "label"
-            ),
-        )
-
-    prev = None
-    for _ in range(CC_FIXED_POINT_CAP):
-        labels = _hop(_hop(labels)).localCheckpoint()
-        total = labels.agg(F.sum("label")).collect()[0][0]
-        if total == prev:
-            return labels
-        prev = total
-    raise RuntimeError(
-        f"{what}: min-label propagation did not converge within "
-        f"{CC_FIXED_POINT_CAP} hop-pairs — component diameter "
-        "exceeds the cap; inspect the candidate-pair graph."
-    )
-
-
 def dedup_fuzzy_cluster(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The last stage of the EDIT-DISTANCE dedup pipeline:
     sorted-neighborhood Levenshtein pairs (text_fuzzy_dups) union
@@ -1283,7 +1224,8 @@ def dedup_fuzzy_cluster(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: label propagation touches only PAIRED docs (a
     vanishing fraction of the corpus); each round is one equi-join +
     partial-aggregatable MIN, run to the exact fixed point
-    (min_label_fixed_point); localCheckpoint truncates lineage.
+    (:func:`graph.connected_components`, which fails loudly at its
+    round cap rather than splitting a deep cluster).
     """
     from postgres_s3_etl_spark.operators.text_analysis import (
         text_fuzzy_dups,
@@ -1295,7 +1237,7 @@ def dedup_fuzzy_cluster(spark: SparkSession, sf_dir: str) -> DataFrame:
     sym = pairs.unionAll(
         pairs.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
     ).localCheckpoint()
-    labels = min_label_fixed_point(sym, "dedup_fuzzy_cluster")
+    labels = connected_components(sym, "dedup_fuzzy_cluster")
     return (
         labels.groupBy("label")
         .agg(F.count(F.lit(1)).cast("bigint").alias("n_members"))
@@ -1322,9 +1264,10 @@ def leakage_safe_split_frame(docs: DataFrame) -> DataFrame:
     pair graph (unverified candidates on purpose — for SPLITS, false
     merges only move whole groups to one side, while a false split
     is the leak); min-label propagation over the paired docs only,
-    run to the exact FIXED POINT (min_label_fixed_point — the oracle
-    computes the exact transitive closure, and since round 11 so does
-    the engine at any diameter, not just ≤ a fixed round count).
+    run to the exact FIXED POINT (:func:`graph.connected_components`
+    — the oracle computes the exact transitive closure, and so does
+    the engine at any diameter under its round cap, which fails
+    loudly rather than split a cluster across the boundary).
     Factored out so tests can feed synthetic corpora.
 
     Scale shape: propagation touches only paired docs; the split
@@ -1350,7 +1293,10 @@ def leakage_safe_split_frame(docs: DataFrame) -> DataFrame:
     sym = pairs.unionAll(
         pairs.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
     ).localCheckpoint()
-    labels = min_label_fixed_point(sym, "leakage_safe_split_frame")
+    try:
+        labels = connected_components(sym, "leakage_safe_split_frame")
+    finally:  # labels are checkpointed: release the band frame
+        bands.unpersist()
     assigned = (
         docs.select(
             "doc_id",
@@ -1359,7 +1305,7 @@ def leakage_safe_split_frame(docs: DataFrame) -> DataFrame:
             .cast("bigint")
             .alias("n_tokens"),
         )
-        .join(labels, docs.doc_id == labels.doc, "left")
+        .join(labels, docs.doc_id == labels.node, "left")
         .select(
             "doc_id",
             "source",
@@ -2025,7 +1971,7 @@ ORACLES["text_split_leakage_safe"] = f"""
 
 # Exact transitive closure (recursive CTE) over the fuzzy pair graph
 # — round-11: the engine now propagates to the exact FIXED POINT
-# (min_label_fixed_point), so the oracle must too; the previous
+# (graph.connected_components), so the oracle must too; the previous
 # unrolled FUZZY_CC_ROUNDS=8 chain would disagree with the (correct)
 # engine on any component with propagation distance > 8.
 ORACLES["dedup_fuzzy_cluster"] = f"""

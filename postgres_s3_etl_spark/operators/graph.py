@@ -954,10 +954,91 @@ def graph_pagerank_converged(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-#: Safety cap for label propagation: iterations are bounded by the
-#: graph diameter, which is tiny for co-purchase graphs (~6-10);
-#: the cap only guards a pathological path graph.
-CC_MAX_ITERS = 50
+#: Round cap of :func:`connected_components`. Rounds are bounded by
+#: the component diameter, which is small for co-purchase and near-dup
+#: graphs; the cap only guards a pathological path graph.
+CC_MAX_ROUNDS = 128
+
+
+def connected_components(sym: DataFrame, what: str) -> DataFrame:
+    """Connected-component labels ``(node, label)`` of a SYMMETRIC,
+    already-materialized edge frame ``sym(src, dst)``: each node's
+    label is the smallest node id in its component.
+
+    Min-label propagation run to the exact fixed point: labels start
+    as the node ids of the distinct ``src``; each round every node
+    takes the min of its own label and its neighbors' labels (one join
+    + one partial-aggregatable MIN), ``localCheckpoint`` truncates the
+    lineage, and a constant-size changed-row count is the only driver
+    value. The loop stops at the first round that changes no label,
+    after at most the largest component diameter + 1 rounds.
+
+    (Round-14 A/B on graph_components: fusing the round into ONE
+    grouped MIN — own label riding the neighbor-message union as a
+    tagged row — measured SLOWER interleaved at sf0.1 (best 7.3 ->
+    12.1 s): the labels-nb_min join is a broadcast here while the
+    union pushed N extra rows through the big exchange. A second A/B
+    — TWO hops per checkpoint + label-sum check — also measured
+    slower (best 9.3 -> 13.2 s over 6 reps): the start-label
+    comparison join per round cost more than the saved checkpoint +
+    count jobs. Single-hop rounds kept. Log-depth large-star /
+    small-star rounds drop in without changing the contract.)
+
+    Raises ``RuntimeError`` naming ``what`` if ``CC_MAX_ROUNDS``
+    rounds do not converge — never returns partial components.
+    """
+    labels = (
+        sym.select(F.col("src").alias("node"))
+        .distinct()
+        .select("node", F.col("node").alias("label"))
+        .localCheckpoint()
+    )
+    for _ in range(CC_MAX_ROUNDS):
+        nb_min = (
+            sym.join(labels, sym.src == labels.node)
+            .groupBy(F.col("dst").alias("node"))
+            .agg(F.min("label").alias("nb_label"))
+        )
+        new_label = F.least("label", F.coalesce("nb_label", "label"))
+        new_labels = (
+            labels.join(nb_min, "node", "left")
+            .select(
+                "node",
+                new_label.alias("label"),
+                (F.col("label") != new_label).alias("chg"),
+            )
+            .localCheckpoint()
+        )
+        changed = new_labels.where(F.col("chg")).count()  # scalar
+        labels = new_labels.select("node", "label")
+        if changed == 0:
+            return labels
+    raise RuntimeError(
+        f"{what}: connected components did not converge in "
+        f"{CC_MAX_ROUNDS} rounds — component diameter exceeds the cap"
+    )
+
+
+def _sym_edges(
+    spark: SparkSession, sf_dir: str, edges: DataFrame
+) -> DataFrame:
+    """Symmetric ``(src, dst)`` layout of the co-purchase edges for the
+    iterative-join loops (components, LPA): on big graphs a persisted
+    hash layout on the per-round join key (see graph_pagerank's sym
+    note: persist preserves the layout, localCheckpoint doesn't), so
+    each round shuffles only the label frame (N rows), not 2|E| edges
+    — measured at sf1: 47 → 25 s best-of-2 on graph_components; on
+    small graphs a checkpoint, since shuffles are cheap there. Callers
+    release it with ``unpersist()``, a no-op on the checkpoint."""
+    n_part = _iter_partitions(spark, sf_dir)
+    sym = edges.unionAll(
+        edges.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
+    )
+    if not n_part:
+        return sym.localCheckpoint()
+    sym = sym.repartition(n_part, "src").persist(ITER_LAYOUT_STORAGE)
+    sym.count()  # materialize the partitioned layout once
+    return sym
 
 
 def graph_components(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -965,15 +1046,9 @@ def graph_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     how many components of each size (nodes = parts that appear in
     at least one co-purchase edge).
 
-    Spark shape: iterative min-label propagation — each round every
-    node takes the min of its own label and its neighbors' labels
-    (one join + one partial-aggregatable min per round), with
-    ``localCheckpoint`` truncating lineage and a constant-size
-    changed-count scalar as the only driver value, exactly the
-    ``dedup_cc_keepset`` recipe. Rounds are bounded by the graph
-    diameter. At 100 TB this is the standard distributed CC
-    (large-star/small-star refinements drop in without changing the
-    contract).
+    Spark shape: :func:`connected_components` over the symmetric edge
+    layout (:func:`_sym_edges`) — one join + one partial-aggregatable
+    min per round, rounds bounded by the graph diameter.
 
     The oracle unrolls CC_ORACLE_ROUNDS min-relaxation rounds as a
     MATERIALIZED CTE chain — O(E) work per round, so it stays
@@ -983,75 +1058,13 @@ def graph_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     loop whenever diameter <= CC_ORACLE_ROUNDS; a violation would
     surface as a visible hash FAIL.
     """
-    edges = _edges_ckpt(spark, sf_dir)
-    # Persist the symmetric edges hash-partitioned on the per-round
-    # join key (see graph_pagerank's sym note: persist preserves the
-    # layout, localCheckpoint doesn't) — each propagation round then
-    # shuffles only the label frame (N rows), not 2|E| edges.
-    # Measured at sf1: 47 → 25 s best-of-2; the round-6 sf10 run had
-    # flagged this operator's α(1→10) = 1.17 as the one super-linear
-    # row, and the per-round edge re-shuffle was exactly the excess.
-    n_part = _iter_partitions(spark, sf_dir)
-    sym = edges.unionAll(
-        edges.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-    )
-    if n_part:
-        sym = sym.repartition(n_part, "src").persist(ITER_LAYOUT_STORAGE)
-        sym.count()  # materialize the partitioned layout once
-    else:
-        sym = sym.localCheckpoint()  # small graph: shuffles are cheap
-    labels = (
-        sym.select(F.col("src").alias("node"))
-        .distinct()
-        .select("node", F.col("node").alias("label"))
-        .localCheckpoint()
-    )
-    # (Round-14 A/B: fusing the round into ONE grouped MIN — own
-    # label riding the neighbor-message union as a tagged row —
-    # measured SLOWER interleaved at sf0.1 (best 7.3 -> 12.1 s): the
-    # labels-nb_min join is a broadcast here while the union pushed
-    # N extra rows through the big exchange. A second A/B — TWO hops
-    # per checkpoint+convergence check, the min_label_fixed_point
-    # recipe — also measured slower (best 9.3 -> 13.2 s over 6
-    # reps): the start-label comparison join per round cost more
-    # than the saved checkpoint+count jobs. Single-hop rounds kept.)
-    for _ in range(CC_MAX_ITERS):
-        nb_min = (
-            sym.join(labels, sym.src == labels.node)
-            .groupBy(F.col("dst").alias("node"))
-            .agg(F.min("label").alias("nb_label"))
-        )
-        new_labels = (
-            labels.join(nb_min, "node", "left")
-            .select(
-                "node",
-                F.least(
-                    "label", F.coalesce("nb_label", "label")
-                ).alias("label"),
-                (F.col("label") != F.least(
-                    "label", F.coalesce("nb_label", "label")
-                )).alias("chg"),
-            )
-            .localCheckpoint()
-        )
-        changed = new_labels.where(F.col("chg")).count()  # scalar
-        labels = new_labels.select("node", "label")
-        if changed == 0:
-            break
-    else:
-        # round-11: never silently return partial components — a
-        # diameter past the cap means a pathological graph, not a
-        # result.
-        raise RuntimeError(
-            f"graph components did not converge in {CC_MAX_ITERS} "
-            "rounds — component diameter exceeds the cap"
-        )
-    if n_part:
-        # Round-15 (guide §5, VERDICT r14 task 8): the final labels
-        # frame is checkpoint-backed, so the persisted edge layout is
-        # dead weight once the loop converges — release it instead of
-        # letting a long-lived session accumulate one cached layout
-        # per graph query.
+    sym = _sym_edges(spark, sf_dir, _edges_ckpt(spark, sf_dir))
+    try:
+        labels = connected_components(sym, "graph_components")
+    finally:
+        # The labels are checkpoint-backed, so a persisted edge layout
+        # is dead weight once the loop ends — release it, on a cap
+        # failure too.
         sym.unpersist()
     return (
         labels.groupBy("label")
@@ -1078,11 +1091,10 @@ def _lpa_labels(
     modularity evaluation. Per round ONE join (edges × labels) + ONE
     grouped count + ONE per-node window top-1 — all keyed shuffles,
     no pair blow-up; ``localCheckpoint`` truncates lineage per round
-    and the symmetric edge frame reuses :func:`_iter_partitions`'s
-    persisted hash layout on big graphs so only the label frame
-    (N rows) re-shuffles each round. The deterministic (count DESC,
-    label ASC) tie-break makes the fixpoint bit-identical to the
-    oracle's unrolled rounds.
+    and the symmetric edge frame is :func:`_sym_edges`' layout, so on
+    big graphs only the label frame (N rows) re-shuffles each round.
+    The deterministic (count DESC, label ASC) tie-break makes the
+    fixpoint bit-identical to the oracle's unrolled rounds.
 
     ``edges`` (round-14): callers that also need the edge frame for
     their own rollups (conductance, modularity) pass their already-
@@ -1090,15 +1102,7 @@ def _lpa_labels(
     per query."""
     if edges is None:
         edges = _edges_ckpt(spark, sf_dir)
-    n_part = _iter_partitions(spark, sf_dir)
-    sym = edges.unionAll(
-        edges.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-    )
-    if n_part:
-        sym = sym.repartition(n_part, "src").persist(ITER_LAYOUT_STORAGE)
-        sym.count()  # materialize the partitioned layout once
-    else:
-        sym = sym.localCheckpoint()
+    sym = _sym_edges(spark, sf_dir, edges)
     labels = (
         sym.select(F.col("src").alias("node"))
         .distinct()
@@ -1138,10 +1142,9 @@ def _lpa_labels(
         # 7.0 s (final-only).
         if it == LPA_ITERS:
             labels = labels.localCheckpoint()
-    if n_part:
-        # Round-15 (guide §5): labels is checkpoint-backed after the
-        # final round — release the persisted edge layout at exit.
-        sym.unpersist()
+    # labels is checkpoint-backed after the final round — release a
+    # persisted edge layout at exit.
+    sym.unpersist()
     return labels
 
 
@@ -2016,7 +2019,7 @@ QUERIES = {
 #: Oracle unroll depth for connected components: must be >= the
 #: graph diameter (co-purchase graphs: one dense giant component,
 #: diameter well under 10 at every tested SF; 32 leaves margin).
-#: The Spark twin iterates to true convergence under CC_MAX_ITERS.
+#: The Spark twin (connected_components) runs to the exact fixed point.
 CC_ORACLE_ROUNDS = 32
 
 

@@ -39,6 +39,8 @@ from pyspark.sql.types import (
     StructType,
 )
 
+from postgres_s3_etl_spark.operators.graph import connected_components
+
 #: media(asset_id, media_type, width, height, duration_ms, payload)
 MEDIA_SCHEMA = StructType(
     [
@@ -5657,15 +5659,16 @@ def _phash_pairs(spark: SparkSession) -> DataFrame:
     )
 
 
-#: Fixed min-label rounds for the phash component accounting — both
-#: engines compute the identical partial fixpoint, so parity holds
-#: even if a (pathologically long) dup chain hasn't converged.
+#: Min-label rounds the SQL oracles of the pHash component queries
+#: unroll. The engine runs :func:`graph.connected_components` to the
+#: exact fixed point; the two agree while every component's diameter
+#: is at most this, and a deeper component shows as a hash FAIL.
 PHASH_CC_ROUNDS = 4
 
 
 def mm_phash_cc_keepset(spark: SparkSession, sf_dir: str) -> DataFrame:
     """End-to-end image dedup keep-set: perceptual-hash near-dup
-    pairs → connected components (fixed min-label rounds) → corpus
+    pairs → connected components (exact min-label fixed point) → corpus
     keep/drop accounting — the image twin of ``dedup_cc_keepset``,
     and the number a storage/curation team actually acts on ("how
     many images survive near-dup collapse?").
@@ -5689,27 +5692,7 @@ def mm_phash_cc_keepset(spark: SparkSession, sf_dir: str) -> DataFrame:
         .distinct()
         .localCheckpoint()
     )
-    labels = (
-        edges.select(F.col("src").alias("node"))
-        .distinct()
-        .select("node", F.col("node").alias("label"))
-    )
-    for _ in range(PHASH_CC_ROUNDS):
-        nb = (
-            edges.join(labels, edges.src == labels.node)
-            .groupBy(F.col("dst").alias("node2"))
-            .agg(F.min("label").alias("nl"))
-        )
-        labels = (
-            labels.join(nb, labels.node == nb.node2, "left")
-            .select(
-                "node",
-                F.least(
-                    F.col("label"), F.coalesce("nl", "label")
-                ).alias("label"),
-            )
-            .localCheckpoint()
-        )
+    labels = connected_components(edges, "mm_phash_cc_keepset")
     comp = labels.groupBy("label").agg(
         F.count(F.lit(1)).cast("bigint").alias("sz")
     )
@@ -6330,7 +6313,7 @@ def mm_pair_crossmodal_dedup(
 
     - ``both`` — image near-dup AND caption jaccard ≥ threshold:
       the redundant-sample class; these edges drive the keep/drop
-      clustering (min-label components, fixed rounds).
+      clustering (min-label components to the exact fixed point).
     - ``image_only`` / ``caption_only`` — single-modality near-dups,
       REPORTED per pair (the curation audit trail) but never
       dropped.
@@ -6427,27 +6410,7 @@ def mm_pair_crossmodal_dedup(
         .distinct()
         .localCheckpoint()
     )
-    labels = (
-        edges.select(F.col("src").alias("node"))
-        .distinct()
-        .select("node", F.col("node").alias("label"))
-    )
-    for _ in range(PHASH_CC_ROUNDS):
-        nb = (
-            edges.join(labels, edges.src == labels.node)
-            .groupBy(F.col("dst").alias("node2"))
-            .agg(F.min("label").alias("nl"))
-        )
-        labels = (
-            labels.join(nb, labels.node == nb.node2, "left")
-            .select(
-                "node",
-                F.least(
-                    F.col("label"), F.coalesce("nl", "label")
-                ).alias("label"),
-            )
-            .localCheckpoint()
-        )
+    labels = connected_components(edges, "mm_pair_crossmodal_dedup")
     part = typed.select("a", "b", "dup_type").unionAll(
         typed.select(
             F.col("b").alias("a"), F.col("a").alias("b"), "dup_type"

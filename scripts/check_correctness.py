@@ -6,6 +6,9 @@ column names, and an order-insensitive value hash (floats rounded to
 6 significant-ish decimals, like a tolerant driver would).
 
 Usage: python scripts/check_correctness.py [sf_dir] [name ...]
+
+A name that matches no query is an error (exit 2), so a typo cannot
+pass as a run of zero queries.
 """
 
 from __future__ import annotations
@@ -57,6 +60,10 @@ def main() -> int:
     import __spark_entry__ as e
 
     qs, oracles = e.queries(), e.oracle_sql()
+    unknown = sorted(only - qs.keys())
+    if unknown:
+        print("unknown query names: " + " ".join(unknown))
+        return 2
     if os.environ.get("SPARK_GRAFT_PLAIN_SESSION"):
         # Mimic the driver: a bare SparkSession with NONE of our
         # session.py defaults — catches any query that silently

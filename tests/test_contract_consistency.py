@@ -7,6 +7,7 @@ points between rounds.
 from __future__ import annotations
 
 import re
+import sys
 
 #: §2 names that intentionally have no queries() entry (documented
 #: environment-gated items).
@@ -55,3 +56,15 @@ def test_oracle_strings_are_nonempty_sql():
     e = _entry()
     for name, sql in e.oracle_sql().items():
         assert isinstance(sql, str) and "SELECT" in sql.upper(), name
+
+
+def test_check_correctness_rejects_unknown_names(monkeypatch, capsys):
+    """A misspelt query name exits 2 before any Spark work, instead of
+    passing as a run of zero queries."""
+    from scripts import check_correctness
+
+    monkeypatch.setattr(
+        sys, "argv", ["check_correctness.py", ".", "graph_components", "nope_q"]
+    )
+    assert check_correctness.main() == 2
+    assert "nope_q" in capsys.readouterr().out
