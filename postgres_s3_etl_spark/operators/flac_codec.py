@@ -39,10 +39,10 @@ from __future__ import annotations
 
 import hashlib
 import struct
-from collections.abc import Iterator
 
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
+
+from postgres_s3_etl_spark.operators.python_lane import row_lane
 
 # NOTE: multimodal.py imports this module at top level (the router's
 # fLaC arm and its oracle need decode_flac/FLAC_BLOCK at import
@@ -813,23 +813,16 @@ def mm_audio_decode_flac(spark: SparkSession, sf_dir: str) -> DataFrame:
     cross the Arrow boundary.
     """
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            out = []
-            for aid, payload in zip(pdf["asset_id"], pdf["payload"]):
-                s = decode_flac(bytes(payload))
-                if s is None:
-                    continue
-                out.append(
-                    (int(aid), len(s), sum(s), sum(v * v for v in s))
-                )
-            yield pd.DataFrame(
-                out, columns=["asset_id", "n_samples", "s_sum", "energy"]
-            )
+    def rows_of(aid, payload):
+        s = decode_flac(bytes(payload))
+        if s is None:
+            return
+        yield (int(aid), len(s), sum(s), sum(v * v for v in s))
 
     media = synth_flac_media(spark).select("asset_id", "payload")
-    return media.mapInPandas(
-        batches,
+    return row_lane(
+        media,
+        rows_of,
         "asset_id bigint, n_samples bigint, s_sum bigint, energy bigint",
     ).orderBy("asset_id")
 
@@ -964,35 +957,24 @@ def mm_audio_decode_flac_stereo(
     with the decode as a typed lane.
     """
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            out = []
-            for aid, payload in zip(pdf["asset_id"], pdf["payload"]):
-                s = decode_flac(bytes(payload))
-                if s is None:
-                    continue
-                left = s[0::2]
-                right = s[1::2]
-                out.append(
-                    (
-                        int(aid),
-                        len(s),
-                        sum(left),
-                        sum(right),
-                        sum(v * v for v in s),
-                    )
-                )
-            yield pd.DataFrame(
-                out,
-                columns=[
-                    "asset_id", "n_samples", "sum_left", "sum_right",
-                    "energy",
-                ],
-            )
+    def rows_of(aid, payload):
+        s = decode_flac(bytes(payload))
+        if s is None:
+            return
+        left = s[0::2]
+        right = s[1::2]
+        yield (
+            int(aid),
+            len(s),
+            sum(left),
+            sum(right),
+            sum(v * v for v in s),
+        )
 
     media = synth_flac_stereo_media(spark).select("asset_id", "payload")
-    return media.mapInPandas(
-        batches,
+    return row_lane(
+        media,
+        rows_of,
         "asset_id bigint, n_samples bigint, sum_left bigint,"
         " sum_right bigint, energy bigint",
     ).orderBy("asset_id")

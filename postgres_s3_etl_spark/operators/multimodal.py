@@ -14,11 +14,12 @@ zlib-compressed PNG with all five scanline filters
 (:func:`decode_png`), audio as PCM WAV RMS windows
 (:func:`decode_wav_rms_windows`), video as YUV4MPEG2 frame streams
 (:func:`decode_y4m`). The original hash-fake paths are kept as the
-generic plumbing shape (``decode_stub=True`` derives deterministic
-fake features; ``decode_stub=False`` raises ``NotImplementedError``
-where a compressed-codec library would plug in — JPEG/H.264 remain
-out of stdlib reach). Everything Spark-side — schema, batch
+generic plumbing shape. Everything Spark-side — schema, batch
 iteration, column pruning, partitioning — is real and tested.
+
+Every per-row decode runs through :func:`python_lane.row_lane`: an
+operator writes only the function from one input row to its output
+tuples, in the order of the output schema.
 """
 
 from __future__ import annotations
@@ -40,6 +41,7 @@ from pyspark.sql.types import (
 )
 
 from postgres_s3_etl_spark.operators.graph import connected_components
+from postgres_s3_etl_spark.operators.python_lane import row_lane
 
 #: media(asset_id, media_type, width, height, duration_ms, payload)
 MEDIA_SCHEMA = StructType(
@@ -94,42 +96,23 @@ def _fake_features(payload: bytes) -> list[int]:
     return [int(h[4 * i : 4 * i + 4], 16) for i in range(FEATURE_DIM)]
 
 
-def extract_features(
-    media: DataFrame, decode_stub: bool = True
-) -> DataFrame:
-    """Decode + featurize via Arrow-batched ``mapInPandas``.
+def extract_features(media: DataFrame) -> DataFrame:
+    """Decode + featurize in an Arrow-batched per-row lane.
 
-    The UDF sees pandas batches (never one row at a time); the binary
-    column stays within the batch — no driver collect, no shuffle of
-    payload bytes. A real decoder replaces ``_fake_features`` only.
+    The binary column stays within the batch — no driver collect, no
+    shuffle of payload bytes. A real decoder replaces
+    ``_fake_features`` only.
     """
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            if not decode_stub:
-                raise NotImplementedError(
-                    "real media decode requires PIL/ffmpeg — not in this "
-                    "container; run with decode_stub=True"
-                )
-            payloads = pdf["payload"]
-            feats = [ _fake_features(bytes(p)) for p in payloads ]
-            out = pd.DataFrame(
-                {
-                    "asset_id": pdf["asset_id"],
-                    "media_type": pdf["media_type"],
-                    "n_bytes": payloads.map(len).astype("int64"),
-                    "payload_digest": payloads.map(
-                        lambda p: _payload_digest(bytes(p))
-                    ),
-                }
-            )
-            for i in range(FEATURE_DIM):
-                out[f"f{i}"] = pd.Series(
-                    [f[i] for f in feats], index=pdf.index, dtype="int64"
-                )
-            yield out
+    def rows_of(aid, media_type, payload):
+        p = bytes(payload)
+        yield (aid, media_type, len(p), _payload_digest(p), *_fake_features(p))
 
-    return media.mapInPandas(batches, FEATURES_SCHEMA)
+    return row_lane(
+        media.select("asset_id", "media_type", "payload"),
+        rows_of,
+        FEATURES_SCHEMA,
+    )
 
 
 def media_stats(features: DataFrame) -> DataFrame:
@@ -181,7 +164,7 @@ FRAMES_SCHEMA = StructType(
 
 
 def sample_frames(
-    media: DataFrame, interval_ms: int = FRAME_INTERVAL_MS, decode_stub: bool = True
+    media: DataFrame, interval_ms: int = FRAME_INTERVAL_MS
 ) -> DataFrame:
     """Frame sampling as a 1→N ``mapInPandas`` expansion: each video
     asset yields one row per ``interval_ms`` of duration. The real
@@ -191,38 +174,22 @@ def sample_frames(
     metadata-only pruning before Python — is the production plumbing.
     """
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            if not decode_stub:
-                raise NotImplementedError(
-                    "real frame decode requires ffmpeg — not in this "
-                    "container; run with decode_stub=True"
-                )
-            out_rows = []
-            for asset_id, dur, payload in zip(
-                pdf["asset_id"], pdf["duration_ms"], pdf["payload"]
-            ):
-                n_frames = max(int(dur) // interval_ms, 1)
-                for i in range(n_frames):
-                    # md5 over the hex of (payload ++ frame-index-be32)
-                    # — same VARCHAR-hashable form as _payload_digest.
-                    digest = hashlib.md5(
-                        (bytes(payload) + i.to_bytes(4, "big")).hex().encode()
-                    )
-                    out_rows.append(
-                        (int(asset_id), i, i * interval_ms, digest.hexdigest())
-                    )
-            yield pd.DataFrame(
-                out_rows,
-                columns=["asset_id", "frame_idx", "frame_ts_ms", "frame_digest"],
+    def rows_of(asset_id, dur, payload):
+        n_frames = max(int(dur) // interval_ms, 1)
+        for i in range(n_frames):
+            # md5 over the hex of (payload ++ frame-index-be32)
+            # — same VARCHAR-hashable form as _payload_digest.
+            digest = hashlib.md5(
+                (bytes(payload) + i.to_bytes(4, "big")).hex().encode()
             )
+            yield (int(asset_id), i, i * interval_ms, digest.hexdigest())
 
     # Metadata predicate prunes BEFORE the Python stage: only video
     # rows (and only the needed columns) cross the Arrow boundary.
     videos = media.where(F.col("media_type") == "video").select(
         "asset_id", "duration_ms", "payload"
     )
-    return videos.mapInPandas(batches, FRAMES_SCHEMA)
+    return row_lane(videos, rows_of, FRAMES_SCHEMA)
 
 
 #: Temporal sampling grid for mm_frame_sample: one sample every
@@ -250,35 +217,23 @@ def mm_frame_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: payload bytes never shuffle; ~5 ints per sampled frame
     cross the Arrow boundary; the rollup is a codegen aggregate.
     """
+    import numpy as np
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
-
-        for pdf in it:
-            out = []
-            for aid, payload in zip(pdf["asset_id"], pdf["payload"]):
-                decoded = decode_y4m(bytes(payload))
-                if decoded is None:
-                    continue
-                w, h, frames = decoded
-                nf = len(frames)
-                for ts in range(
-                    0, nf * Y4M_FRAME_MS, FRAME_SAMPLE_INTERVAL_MS
-                ):
-                    fi = ts // Y4M_FRAME_MS
-                    ysum = int(frames[fi][0].astype(np.int64).sum())
-                    out.append((int(aid), nf, fi, ts, ysum))
-            yield pd.DataFrame(
-                out,
-                columns=[
-                    "asset_id", "n_stream_frames", "frame_idx",
-                    "frame_ts_ms", "sum_y",
-                ],
-            )
+    def rows_of(aid, payload):
+        decoded = decode_y4m(bytes(payload))
+        if decoded is None:
+            return
+        w, h, frames = decoded
+        nf = len(frames)
+        for ts in range(0, nf * Y4M_FRAME_MS, FRAME_SAMPLE_INTERVAL_MS):
+            fi = ts // Y4M_FRAME_MS
+            ysum = int(frames[fi][0].astype(np.int64).sum())
+            yield (int(aid), nf, fi, ts, ysum)
 
     media = synth_y4m_media(spark).select("asset_id", "payload")
-    per_frame = media.mapInPandas(
-        batches,
+    per_frame = row_lane(
+        media,
+        rows_of,
         "asset_id bigint, n_stream_frames int, frame_idx int, "
         "frame_ts_ms int, sum_y bigint",
     )
@@ -346,58 +301,37 @@ def decode_wav_rms_windows(
 
 
 def window_audio(
-    media: DataFrame,
-    window_ms: int = AUDIO_WINDOW_MS,
-    decode_stub: bool = True,
+    media: DataFrame, window_ms: int = AUDIO_WINDOW_MS
 ) -> DataFrame:
-    """Audio windowing as a 1→N ``mapInPandas`` expansion: each audio
+    """Audio windowing as a 1→N per-row expansion: each audio
     asset yields one row per ``window_ms`` of duration with a
     per-window level feature (RMS/loudness).
 
     PCM WAV payloads get a REAL decode (stdlib ``wave`` + numpy RMS —
     see :func:`decode_wav_rms_windows`); other formats fall back to a
-    deterministic digest-derived level when ``decode_stub=True`` and
-    raise ``NotImplementedError`` otherwise (mp3/ogg/etc. need
+    deterministic digest-derived level (mp3/ogg/etc. need
     ffmpeg/librosa, absent from this container). The Spark-side shape
     — metadata pruning before Python, in-batch row expansion,
     JVM-side aggregation after — is identical either way.
     """
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            out_rows = []
-            for asset_id, dur, payload in zip(
-                pdf["asset_id"], pdf["duration_ms"], pdf["payload"]
-            ):
-                levels = decode_wav_rms_windows(bytes(payload), window_ms)
-                if levels is not None:
-                    out_rows.extend(
-                        (int(asset_id), i, i * window_ms, lvl)
-                        for i, lvl in enumerate(levels)
-                    )
-                    continue
-                if not decode_stub:
-                    raise NotImplementedError(
-                        "non-WAV audio decode requires ffmpeg/librosa — "
-                        "not in this container; run with decode_stub=True"
-                    )
-                n_win = max(int(dur) // window_ms, 1)
-                for i in range(n_win):
-                    digest = hashlib.md5(
-                        (bytes(payload) + i.to_bytes(4, "big")).hex().encode()
-                    ).hexdigest()
-                    out_rows.append(
-                        (int(asset_id), i, i * window_ms, int(digest[:4], 16))
-                    )
-            yield pd.DataFrame(
-                out_rows,
-                columns=["asset_id", "window_idx", "window_ts_ms", "level"],
-            )
+    def rows_of(asset_id, dur, payload):
+        levels = decode_wav_rms_windows(bytes(payload), window_ms)
+        if levels is not None:
+            for i, lvl in enumerate(levels):
+                yield (int(asset_id), i, i * window_ms, lvl)
+            return
+        n_win = max(int(dur) // window_ms, 1)
+        for i in range(n_win):
+            digest = hashlib.md5(
+                (bytes(payload) + i.to_bytes(4, "big")).hex().encode()
+            ).hexdigest()
+            yield (int(asset_id), i, i * window_ms, int(digest[:4], 16))
 
     audio = media.where(F.col("media_type") == "audio").select(
         "asset_id", "duration_ms", "payload"
     )
-    return audio.mapInPandas(batches, WINDOWS_SCHEMA)
+    return row_lane(audio, rows_of, WINDOWS_SCHEMA)
 
 
 N_WAV_ASSETS = 48
@@ -495,30 +429,15 @@ def mm_audio_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
     Arrow boundary; the per-asset rollup is a codegen aggregate.
     """
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            out = []
-            for aid, payload in zip(pdf["asset_id"], pdf["payload"]):
-                wins = decode_wav_windows_exact(
-                    bytes(payload), AUDIO_WINDOW_MS
-                )
-                if wins is None:
-                    continue
-                for i, (n, ssum, ssq) in enumerate(wins):
-                    out.append(
-                        (int(aid), i, i * AUDIO_WINDOW_MS, n, ssum, ssq)
-                    )
-            yield pd.DataFrame(
-                out,
-                columns=[
-                    "asset_id", "window_idx", "window_ts_ms",
-                    "n_samples", "sum_s", "ssq_s",
-                ],
-            )
+    def rows_of(aid, payload):
+        wins = decode_wav_windows_exact(bytes(payload), AUDIO_WINDOW_MS)
+        for i, (n, ssum, ssq) in enumerate(wins or ()):
+            yield (int(aid), i, i * AUDIO_WINDOW_MS, n, ssum, ssq)
 
     media = synth_wav_media(spark).select("asset_id", "payload")
-    per_win = media.mapInPandas(
-        batches,
+    per_win = row_lane(
+        media,
+        rows_of,
         "asset_id bigint, window_idx int, window_ts_ms int, "
         "n_samples bigint, sum_s bigint, ssq_s bigint",
     )
@@ -556,35 +475,29 @@ def mm_audio_dft_peak(spark: SparkSession, sf_dir: str) -> DataFrame:
     cross Arrow (178 here); the per-asset winner is one bounded
     window.
     """
+    import io
+    import wave
+
     import numpy as np
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import io
-        import wave
-
-        for pdf in it:
-            out = []
-            for aid, payload in zip(pdf["asset_id"], pdf["payload"]):
-                with wave.open(io.BytesIO(bytes(payload))) as w:
-                    if w.getnchannels() != 1 or w.getsampwidth() != 2:
-                        continue
-                    raw = w.readframes(w.getnframes())
-                s = np.frombuffer(raw, dtype="<i2").astype(np.int64)
-                n = len(s)
-                for p in AUDIO_DFT_PERIODS:
-                    res = np.bincount(
-                        np.arange(n) % p, weights=s, minlength=p
-                    ).astype(np.int64)
-                    for r in range(p):
-                        out.append((int(aid), n, p, r, int(res[r])))
-            yield pd.DataFrame(
-                out,
-                columns=["asset_id", "n_samples", "p", "r", "csum"],
-            )
+    def rows_of(aid, payload):
+        with wave.open(io.BytesIO(bytes(payload))) as w:
+            if w.getnchannels() != 1 or w.getsampwidth() != 2:
+                return
+            raw = w.readframes(w.getnframes())
+        s = np.frombuffer(raw, dtype="<i2").astype(np.int64)
+        n = len(s)
+        for p in AUDIO_DFT_PERIODS:
+            res = np.bincount(
+                np.arange(n) % p, weights=s, minlength=p
+            ).astype(np.int64)
+            for r in range(p):
+                yield (int(aid), n, p, r, int(res[r]))
 
     media = synth_wav_media(spark).select("asset_id", "payload")
-    folded = media.mapInPandas(
-        batches,
+    folded = row_lane(
+        media,
+        rows_of,
         "asset_id bigint, n_samples bigint, p int, r int, csum bigint",
     )
     phase = (
@@ -676,35 +589,29 @@ def _bin_powers(spark: SparkSession) -> DataFrame:
     """``(asset_id, p, power)`` — floor-6 DFT bin powers at the
     MEL_PERIODS frequencies via the residue-fold contract; the
     shared base of the mel/MFCC/flatness chain."""
+    import io
+    import wave
+
     import numpy as np
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import io
-        import wave
-
-        for pdf in it:
-            out = []
-            for aid, payload in zip(pdf["asset_id"], pdf["payload"]):
-                with wave.open(io.BytesIO(bytes(payload))) as w:
-                    if w.getnchannels() != 1 or w.getsampwidth() != 2:
-                        continue
-                    raw = w.readframes(w.getnframes())
-                s = np.frombuffer(raw, dtype="<i2").astype(np.int64)
-                n = len(s)
-                for p in MEL_PERIODS:
-                    res = np.bincount(
-                        np.arange(n) % p, weights=s, minlength=p
-                    ).astype(np.int64)
-                    for r in range(p):
-                        out.append((int(aid), n, p, r, int(res[r])))
-            yield pd.DataFrame(
-                out,
-                columns=["asset_id", "n_samples", "p", "r", "csum"],
-            )
+    def rows_of(aid, payload):
+        with wave.open(io.BytesIO(bytes(payload))) as w:
+            if w.getnchannels() != 1 or w.getsampwidth() != 2:
+                return
+            raw = w.readframes(w.getnframes())
+        s = np.frombuffer(raw, dtype="<i2").astype(np.int64)
+        n = len(s)
+        for p in MEL_PERIODS:
+            res = np.bincount(
+                np.arange(n) % p, weights=s, minlength=p
+            ).astype(np.int64)
+            for r in range(p):
+                yield (int(aid), n, p, r, int(res[r]))
 
     media = synth_wav_media(spark).select("asset_id", "payload")
-    folded = media.mapInPandas(
-        batches,
+    folded = row_lane(
+        media,
+        rows_of,
         "asset_id bigint, n_samples bigint, p int, r int, csum bigint",
     )
     phase = (
@@ -1023,36 +930,25 @@ def mm_image_decode_tiff(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     import numpy as np
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            out = []
-            for aid, payload in zip(pdf["asset_id"], pdf["payload"]):
-                img = decode_tiff_gray(bytes(payload))
-                if img is None:
-                    continue
-                px = img.astype(np.int64)
-                out.append(
-                    (
-                        int(aid),
-                        img.shape[1],
-                        img.shape[0],
-                        img.shape[0] * img.shape[1],
-                        int(px.sum()),
-                        int((px * px).sum()),
-                        int(px[0, :].sum()),
-                    )
-                )
-            yield pd.DataFrame(
-                out,
-                columns=[
-                    "asset_id", "width", "height", "n_px",
-                    "sum_g", "ssq_g", "row0_sum",
-                ],
-            )
+    def rows_of(aid, payload):
+        img = decode_tiff_gray(bytes(payload))
+        if img is None:
+            return
+        px = img.astype(np.int64)
+        yield (
+            int(aid),
+            img.shape[1],
+            img.shape[0],
+            img.shape[0] * img.shape[1],
+            int(px.sum()),
+            int((px * px).sum()),
+            int(px[0, :].sum()),
+        )
 
     media = synth_tiff_media(spark).select("asset_id", "payload")
-    return media.mapInPandas(
-        batches,
+    return row_lane(
+        media,
+        rows_of,
         "asset_id bigint, width int, height int, n_px bigint, "
         "sum_g bigint, ssq_g bigint, row0_sum bigint",
     ).orderBy("asset_id")
@@ -1070,32 +966,27 @@ def mm_audio_zero_crossings(spark: SparkSession, sf_dir: str) -> DataFrame:
     the oracle recomputes sign flips from the closed-form samples
     with one lead() over the generated series.
     """
+    import io
+    import wave
+
     import numpy as np
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import io
-        import wave
-
-        for pdf in it:
-            out = []
-            for aid, payload in zip(pdf["asset_id"], pdf["payload"]):
-                with wave.open(io.BytesIO(bytes(payload))) as wv:
-                    if wv.getnchannels() != 1 or wv.getsampwidth() != 2:
-                        continue
-                    raw = wv.readframes(wv.getnframes())
-                s = np.frombuffer(raw, dtype="<i2").astype(np.int64)
-                neg = s < 0
-                flips = int((neg[1:] != neg[:-1]).sum())
-                out.append((int(aid), len(s), flips))
-            yield pd.DataFrame(
-                out, columns=["asset_id", "n_samples", "n_crossings"]
-            )
+    def rows_of(aid, payload):
+        with wave.open(io.BytesIO(bytes(payload))) as wv:
+            if wv.getnchannels() != 1 or wv.getsampwidth() != 2:
+                return
+            raw = wv.readframes(wv.getnframes())
+        s = np.frombuffer(raw, dtype="<i2").astype(np.int64)
+        neg = s < 0
+        yield (int(aid), len(s), int((neg[1:] != neg[:-1]).sum()))
 
     media = synth_wav_media(spark).select("asset_id", "payload")
     f6 = lambda c: F.floor(c * 1e6) / 1e6  # noqa: E731
     return (
-        media.mapInPandas(
-            batches, "asset_id bigint, n_samples bigint, n_crossings bigint"
+        row_lane(
+            media,
+            rows_of,
+            "asset_id bigint, n_samples bigint, n_crossings bigint",
         )
         .select(
             "asset_id",
@@ -1239,26 +1130,16 @@ def mm_audio_alaw(spark: SparkSession, sf_dir: str) -> DataFrame:
     Arrow boundary.
     """
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            out = []
-            for aid, payload in zip(pdf["asset_id"], pdf["payload"]):
-                dec = decode_wav_alaw_exact(bytes(payload))
-                if dec is None:
-                    continue
-                out.append((int(aid),) + dec)
-            yield pd.DataFrame(
-                out,
-                columns=[
-                    "asset_id", "n_samples", "sum_pcm", "ssq_pcm",
-                    "peak_abs",
-                ],
-            )
+    def rows_of(aid, payload):
+        dec = decode_wav_alaw_exact(bytes(payload))
+        if dec is not None:
+            yield (int(aid),) + dec
 
     media = synth_alaw_media(spark).select("asset_id", "payload")
     return (
-        media.mapInPandas(
-            batches,
+        row_lane(
+            media,
+            rows_of,
             "asset_id bigint, n_samples bigint, sum_pcm bigint, "
             "ssq_pcm bigint, peak_abs bigint",
         )
@@ -1360,26 +1241,16 @@ def mm_audio_mulaw(spark: SparkSession, sf_dir: str) -> DataFrame:
     Arrow boundary; the final ordering is a bounded asset-grain sort.
     """
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            out = []
-            for aid, payload in zip(pdf["asset_id"], pdf["payload"]):
-                dec = decode_wav_mulaw_exact(bytes(payload))
-                if dec is None:
-                    continue
-                out.append((int(aid),) + dec)
-            yield pd.DataFrame(
-                out,
-                columns=[
-                    "asset_id", "n_samples", "sum_pcm", "ssq_pcm",
-                    "peak_abs",
-                ],
-            )
+    def rows_of(aid, payload):
+        dec = decode_wav_mulaw_exact(bytes(payload))
+        if dec is not None:
+            yield (int(aid),) + dec
 
     media = synth_mulaw_media(spark).select("asset_id", "payload")
     return (
-        media.mapInPandas(
-            batches,
+        row_lane(
+            media,
+            rows_of,
             "asset_id bigint, n_samples bigint, sum_pcm bigint, "
             "ssq_pcm bigint, peak_abs bigint",
         )
@@ -1399,10 +1270,8 @@ PATCHES_SCHEMA = StructType(
 )
 
 
-def sample_patches(
-    media: DataFrame, patch_px: int = PATCH_PX, decode_stub: bool = True
-) -> DataFrame:
-    """Vision-transformer-style patch grid as a 1→N ``mapInPandas``
+def sample_patches(media: DataFrame, patch_px: int = PATCH_PX) -> DataFrame:
+    """Vision-transformer-style patch grid as a 1→N per-row
     expansion: each image yields ceil(w/p) × ceil(h/p) patch rows.
     The real crop+embed (PIL/torchvision) is stubbed with a
     deterministic digest of (payload, px, py); the Spark-side shape
@@ -1410,39 +1279,24 @@ def sample_patches(
     payload shuffle — is the production plumbing.
     """
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            if not decode_stub:
-                raise NotImplementedError(
-                    "real patch extraction requires PIL/torchvision — not "
-                    "in this container; run with decode_stub=True"
+    def rows_of(asset_id, w, h, payload):
+        nx = -(-int(w) // patch_px)
+        ny = -(-int(h) // patch_px)
+        for py in range(ny):
+            for px in range(nx):
+                digest = hashlib.md5(
+                    (
+                        bytes(payload)
+                        + px.to_bytes(4, "big")
+                        + py.to_bytes(4, "big")
+                    ).hex().encode()
                 )
-            out_rows = []
-            for asset_id, w, h, payload in zip(
-                pdf["asset_id"], pdf["width"], pdf["height"], pdf["payload"]
-            ):
-                nx = -(-int(w) // patch_px)
-                ny = -(-int(h) // patch_px)
-                for py in range(ny):
-                    for px in range(nx):
-                        digest = hashlib.md5(
-                            (
-                                bytes(payload)
-                                + px.to_bytes(4, "big")
-                                + py.to_bytes(4, "big")
-                            ).hex().encode()
-                        )
-                        out_rows.append(
-                            (int(asset_id), px, py, digest.hexdigest())
-                        )
-            yield pd.DataFrame(
-                out_rows, columns=["asset_id", "px", "py", "patch_digest"]
-            )
+                yield (int(asset_id), px, py, digest.hexdigest())
 
     images = media.where(F.col("media_type") == "image").select(
         "asset_id", "width", "height", "payload"
     )
-    return images.mapInPandas(batches, PATCHES_SCHEMA)
+    return row_lane(images, rows_of, PATCHES_SCHEMA)
 
 
 #: 8-px patches over the 16–23 × 12–16 BMP assets → a 2–3 × 2 grid
@@ -1467,32 +1321,23 @@ def mm_image_patches(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: payload bytes never shuffle; 4 ints per patch cross the
     Arrow boundary; the rollup is a codegen aggregate.
     """
+    import numpy as np
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
-
-        for pdf in it:
-            out = []
-            for aid, payload in zip(pdf["asset_id"], pdf["payload"]):
-                img = decode_bmp24(bytes(payload))
-                if img is None:
-                    continue
-                px = img.astype(np.int64).sum(axis=2)  # per-pixel r+g+b
-                h, w = px.shape
-                p = BMP_PATCH_PX
-                for py in range(-(-h // p)):
-                    for gx in range(-(-w // p)):
-                        patch = px[py * p : (py + 1) * p, gx * p : (gx + 1) * p]
-                        out.append(
-                            (int(aid), gx, py, int(patch.sum()))
-                        )
-            yield pd.DataFrame(
-                out, columns=["asset_id", "px", "py", "brightness"]
-            )
+    def rows_of(aid, payload):
+        img = decode_bmp24(bytes(payload))
+        if img is None:
+            return
+        px = img.astype(np.int64).sum(axis=2)  # per-pixel r+g+b
+        h, w = px.shape
+        p = BMP_PATCH_PX
+        for py in range(-(-h // p)):
+            for gx in range(-(-w // p)):
+                patch = px[py * p : (py + 1) * p, gx * p : (gx + 1) * p]
+                yield (int(aid), gx, py, int(patch.sum()))
 
     media = synth_bmp_media(spark).select("asset_id", "payload")
-    patches = media.mapInPandas(
-        batches, "asset_id bigint, px int, py int, brightness bigint"
+    patches = row_lane(
+        media, rows_of, "asset_id bigint, px int, py int, brightness bigint"
     )
     return (
         patches.groupBy("asset_id")
@@ -1708,41 +1553,28 @@ def mm_image_decode_bmp(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     import numpy as np
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            out = []
-            for aid, payload in zip(pdf["asset_id"], pdf["payload"]):
-                img = decode_bmp24(bytes(payload))
-                if img is None:
-                    continue
-                px = img.astype(np.int64)
-                b, g, r = px[:, :, 0], px[:, :, 1], px[:, :, 2]
-                out.append(
-                    (
-                        int(aid),
-                        img.shape[1],
-                        img.shape[0],
-                        img.shape[0] * img.shape[1],
-                        int(r.sum()),
-                        int(g.sum()),
-                        int(b.sum()),
-                        int((r * r).sum()),
-                        int((g * g).sum()),
-                        int((b * b).sum()),
-                        int(r[0, :].sum()),  # top row — y-flip witness
-                    )
-                )
-            yield pd.DataFrame(
-                out,
-                columns=[
-                    "asset_id", "width", "height", "n_px",
-                    "sum_r", "sum_g", "sum_b",
-                    "ssq_r", "ssq_g", "ssq_b", "row0_r_sum",
-                ],
-            )
+    def rows_of(aid, payload):
+        img = decode_bmp24(bytes(payload))
+        if img is None:
+            return
+        px = img.astype(np.int64)
+        b, g, r = px[:, :, 0], px[:, :, 1], px[:, :, 2]
+        yield (
+            int(aid),
+            img.shape[1],
+            img.shape[0],
+            img.shape[0] * img.shape[1],
+            int(r.sum()),
+            int(g.sum()),
+            int(b.sum()),
+            int((r * r).sum()),
+            int((g * g).sum()),
+            int((b * b).sum()),
+            int(r[0, :].sum()),  # top row — y-flip witness
+        )
 
     media = synth_bmp_media(spark).select("asset_id", "payload")
-    return media.mapInPandas(batches, _BMP_STATS_SCHEMA).orderBy("asset_id")
+    return row_lane(media, rows_of, _BMP_STATS_SCHEMA).orderBy("asset_id")
 
 
 N_PGM_ASSETS = 40
@@ -1872,38 +1704,27 @@ def mm_image_decode_ppm(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     import numpy as np
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            out = []
-            for aid, payload in zip(pdf["asset_id"], pdf["payload"]):
-                img = decode_ppm(bytes(payload))
-                if img is None:
-                    continue
-                px = img.astype(np.int64)
-                out.append(
-                    (
-                        int(aid),
-                        img.shape[1],
-                        img.shape[0],
-                        img.shape[0] * img.shape[1],
-                        int(px[:, :, 0].sum()),
-                        int(px[:, :, 1].sum()),
-                        int(px[:, :, 2].sum()),
-                        int((px * px).sum()),
-                        int(px[0, :, :].sum()),
-                    )
-                )
-            yield pd.DataFrame(
-                out,
-                columns=[
-                    "asset_id", "width", "height", "n_px",
-                    "sum_r", "sum_g", "sum_b", "ssq_rgb", "row0_sum",
-                ],
-            )
+    def rows_of(aid, payload):
+        img = decode_ppm(bytes(payload))
+        if img is None:
+            return
+        px = img.astype(np.int64)
+        yield (
+            int(aid),
+            img.shape[1],
+            img.shape[0],
+            img.shape[0] * img.shape[1],
+            int(px[:, :, 0].sum()),
+            int(px[:, :, 1].sum()),
+            int(px[:, :, 2].sum()),
+            int((px * px).sum()),
+            int(px[0, :, :].sum()),
+        )
 
     media = synth_ppm_media(spark).select("asset_id", "payload")
-    return media.mapInPandas(
-        batches,
+    return row_lane(
+        media,
+        rows_of,
         "asset_id bigint, width int, height int, n_px bigint, "
         "sum_r bigint, sum_g bigint, sum_b bigint, ssq_rgb bigint, "
         "row0_sum bigint",
@@ -1933,36 +1754,25 @@ def mm_image_decode_pgm(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     import numpy as np
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            out = []
-            for aid, payload in zip(pdf["asset_id"], pdf["payload"]):
-                img = decode_pgm(bytes(payload))
-                if img is None:
-                    continue
-                px = img.astype(np.int64)
-                out.append(
-                    (
-                        int(aid),
-                        img.shape[1],
-                        img.shape[0],
-                        img.shape[0] * img.shape[1],
-                        int(px.sum()),
-                        int((px * px).sum()),
-                        int(px[0, :].sum()),
-                    )
-                )
-            yield pd.DataFrame(
-                out,
-                columns=[
-                    "asset_id", "width", "height", "n_px",
-                    "sum_g", "ssq_g", "row0_sum",
-                ],
-            )
+    def rows_of(aid, payload):
+        img = decode_pgm(bytes(payload))
+        if img is None:
+            return
+        px = img.astype(np.int64)
+        yield (
+            int(aid),
+            img.shape[1],
+            img.shape[0],
+            img.shape[0] * img.shape[1],
+            int(px.sum()),
+            int((px * px).sum()),
+            int(px[0, :].sum()),
+        )
 
     media = synth_pgm_media(spark).select("asset_id", "payload")
-    return media.mapInPandas(
-        batches,
+    return row_lane(
+        media,
+        rows_of,
         "asset_id bigint, width int, height int, n_px bigint, "
         "sum_g bigint, ssq_g bigint, row0_sum bigint",
     ).orderBy("asset_id")
@@ -1986,46 +1796,35 @@ def mm_image_hist_equalize(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     import numpy as np
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            out = []
-            for aid, payload in zip(pdf["asset_id"], pdf["payload"]):
-                img = decode_pgm(bytes(payload))
-                if img is None:
-                    continue
-                px = img.astype(np.int64).ravel()
-                hist = np.bincount(px, minlength=256)
-                cdf = hist.cumsum()
-                cdf_min = int(cdf[hist.nonzero()[0][0]])
-                n = int(px.size)
-                denom = n - cdf_min
-                if denom <= 0:  # constant image: map everything to 0
-                    eq = np.zeros_like(px)
-                else:
-                    lut = (cdf - cdf_min) * 255 // denom
-                    eq = lut[px]
-                out.append(
-                    (
-                        int(aid),
-                        n,
-                        int(px.sum()),
-                        int(eq.sum()),
-                        int((eq * eq).sum()),
-                        int(eq.min()),
-                        int(eq.max()),
-                    )
-                )
-            yield pd.DataFrame(
-                out,
-                columns=[
-                    "asset_id", "n_px", "sum_orig", "sum_eq",
-                    "ssq_eq", "min_eq", "max_eq",
-                ],
-            )
+    def rows_of(aid, payload):
+        img = decode_pgm(bytes(payload))
+        if img is None:
+            return
+        px = img.astype(np.int64).ravel()
+        hist = np.bincount(px, minlength=256)
+        cdf = hist.cumsum()
+        cdf_min = int(cdf[hist.nonzero()[0][0]])
+        n = int(px.size)
+        denom = n - cdf_min
+        if denom <= 0:  # constant image: map everything to 0
+            eq = np.zeros_like(px)
+        else:
+            lut = (cdf - cdf_min) * 255 // denom
+            eq = lut[px]
+        yield (
+            int(aid),
+            n,
+            int(px.sum()),
+            int(eq.sum()),
+            int((eq * eq).sum()),
+            int(eq.min()),
+            int(eq.max()),
+        )
 
     media = synth_pgm_media(spark).select("asset_id", "payload")
-    return media.mapInPandas(
-        batches,
+    return row_lane(
+        media,
+        rows_of,
         "asset_id bigint, n_px bigint, sum_orig bigint, sum_eq bigint, "
         "ssq_eq bigint, min_eq bigint, max_eq bigint",
     ).orderBy("asset_id")
@@ -2048,43 +1847,32 @@ def mm_image_conv_edge(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     import numpy as np
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            out = []
-            for aid, payload in zip(pdf["asset_id"], pdf["payload"]):
-                img = decode_pgm(bytes(payload))
-                if img is None or img.shape[0] < 3 or img.shape[1] < 3:
-                    continue
-                p = img.astype(np.int64)
-                gx = (
-                    (p[:-2, 2:] + 2 * p[1:-1, 2:] + p[2:, 2:])
-                    - (p[:-2, :-2] + 2 * p[1:-1, :-2] + p[2:, :-2])
-                )
-                gy = (
-                    (p[2:, :-2] + 2 * p[2:, 1:-1] + p[2:, 2:])
-                    - (p[:-2, :-2] + 2 * p[:-2, 1:-1] + p[:-2, 2:])
-                )
-                mag = np.abs(gx) + np.abs(gy)
-                out.append(
-                    (
-                        int(aid),
-                        int(mag.size),
-                        int(mag.sum()),
-                        int(mag.max()),
-                        int((mag >= 255).sum()),
-                    )
-                )
-            yield pd.DataFrame(
-                out,
-                columns=[
-                    "asset_id", "n_interior", "edge_energy",
-                    "peak_grad", "n_strong",
-                ],
-            )
+    def rows_of(aid, payload):
+        img = decode_pgm(bytes(payload))
+        if img is None or img.shape[0] < 3 or img.shape[1] < 3:
+            return
+        p = img.astype(np.int64)
+        gx = (
+            (p[:-2, 2:] + 2 * p[1:-1, 2:] + p[2:, 2:])
+            - (p[:-2, :-2] + 2 * p[1:-1, :-2] + p[2:, :-2])
+        )
+        gy = (
+            (p[2:, :-2] + 2 * p[2:, 1:-1] + p[2:, 2:])
+            - (p[:-2, :-2] + 2 * p[:-2, 1:-1] + p[:-2, 2:])
+        )
+        mag = np.abs(gx) + np.abs(gy)
+        yield (
+            int(aid),
+            int(mag.size),
+            int(mag.sum()),
+            int(mag.max()),
+            int((mag >= 255).sum()),
+        )
 
     media = synth_pgm_media(spark).select("asset_id", "payload")
-    return media.mapInPandas(
-        batches,
+    return row_lane(
+        media,
+        rows_of,
         "asset_id bigint, n_interior bigint, edge_energy bigint, "
         "peak_grad bigint, n_strong bigint",
     ).orderBy("asset_id")
@@ -2115,49 +1903,36 @@ def mm_image_resize(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     import numpy as np
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            out = []
-            for aid, payload in zip(pdf["asset_id"], pdf["payload"]):
-                img = decode_bmp24(bytes(payload))
-                if img is None:
-                    continue
-                h, w = img.shape[:2]
-                h2, w2 = h // 2 * 2, w // 2 * 2
-                p = img[:h2, :w2].astype(np.int64)
-                down = (
-                    p[0::2, 0::2]
-                    + p[1::2, 0::2]
-                    + p[0::2, 1::2]
-                    + p[1::2, 1::2]
-                ) // 4
-                b, g, r = down[:, :, 0], down[:, :, 1], down[:, :, 2]
-                out.append(
-                    (
-                        int(aid),
-                        down.shape[1],
-                        down.shape[0],
-                        down.shape[0] * down.shape[1],
-                        int(r.sum()),
-                        int(g.sum()),
-                        int(b.sum()),
-                        int(r[0, :].sum()),  # top row — flip witness
-                        int(r[0, 0]),
-                        int(g[0, 0]),
-                        int(b[0, 0]),
-                    )
-                )
-            yield pd.DataFrame(
-                out,
-                columns=[
-                    "asset_id", "out_width", "out_height", "n_px_out",
-                    "sum_r", "sum_g", "sum_b", "row0_r_sum",
-                    "px00_r", "px00_g", "px00_b",
-                ],
-            )
+    def rows_of(aid, payload):
+        img = decode_bmp24(bytes(payload))
+        if img is None:
+            return
+        h, w = img.shape[:2]
+        h2, w2 = h // 2 * 2, w // 2 * 2
+        p = img[:h2, :w2].astype(np.int64)
+        down = (
+            p[0::2, 0::2]
+            + p[1::2, 0::2]
+            + p[0::2, 1::2]
+            + p[1::2, 1::2]
+        ) // 4
+        b, g, r = down[:, :, 0], down[:, :, 1], down[:, :, 2]
+        yield (
+            int(aid),
+            down.shape[1],
+            down.shape[0],
+            down.shape[0] * down.shape[1],
+            int(r.sum()),
+            int(g.sum()),
+            int(b.sum()),
+            int(r[0, :].sum()),  # top row — flip witness
+            int(r[0, 0]),
+            int(g[0, 0]),
+            int(b[0, 0]),
+        )
 
     media = synth_bmp_media(spark).select("asset_id", "payload")
-    return media.mapInPandas(batches, _RESIZE_STATS_SCHEMA).orderBy(
+    return row_lane(media, rows_of, _RESIZE_STATS_SCHEMA).orderBy(
         "asset_id"
     )
 
@@ -2378,46 +2153,32 @@ def mm_image_decode_png(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: identical plumbing to the BMP decoder — payload bytes
     never leave the Arrow batch, 12 ints/asset cross to the JVM.
     """
+    import numpy as np
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
-
-        for pdf in it:
-            out = []
-            for aid, payload in zip(pdf["asset_id"], pdf["payload"]):
-                decoded = decode_png(bytes(payload))
-                if decoded is None:
-                    continue
-                img, filters = decoded
-                px = img.astype(np.int64)
-                r, g, b = px[:, :, 0], px[:, :, 1], px[:, :, 2]
-                out.append(
-                    (
-                        int(aid),
-                        img.shape[1],
-                        img.shape[0],
-                        len(filters),
-                        img.shape[0] * img.shape[1],
-                        int(r.sum()),
-                        int(g.sum()),
-                        int(b.sum()),
-                        int((r * r).sum()),
-                        int((g * g).sum()),
-                        int((b * b).sum()),
-                        int(r[0, :].sum()),
-                    )
-                )
-            yield pd.DataFrame(
-                out,
-                columns=[
-                    "asset_id", "width", "height", "n_filter_types",
-                    "n_px", "sum_r", "sum_g", "sum_b",
-                    "ssq_r", "ssq_g", "ssq_b", "row0_r_sum",
-                ],
-            )
+    def rows_of(aid, payload):
+        decoded = decode_png(bytes(payload))
+        if decoded is None:
+            return
+        img, filters = decoded
+        px = img.astype(np.int64)
+        r, g, b = px[:, :, 0], px[:, :, 1], px[:, :, 2]
+        yield (
+            int(aid),
+            img.shape[1],
+            img.shape[0],
+            len(filters),
+            img.shape[0] * img.shape[1],
+            int(r.sum()),
+            int(g.sum()),
+            int(b.sum()),
+            int((r * r).sum()),
+            int((g * g).sum()),
+            int((b * b).sum()),
+            int(r[0, :].sum()),
+        )
 
     media = synth_png_media(spark).select("asset_id", "payload")
-    return media.mapInPandas(batches, _PNG_STATS_SCHEMA).orderBy("asset_id")
+    return row_lane(media, rows_of, _PNG_STATS_SCHEMA).orderBy("asset_id")
 
 
 #: Real video decode (round-5): YUV4MPEG2 ("y4m") is a public
@@ -2545,38 +2306,25 @@ def mm_video_decode_y4m(spark: SparkSession, sf_dir: str) -> DataFrame:
     cross to the JVM, and the per-asset rollup is a plain codegen
     aggregate.
     """
+    import numpy as np
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
-
-        for pdf in it:
-            out = []
-            for aid, payload in zip(pdf["asset_id"], pdf["payload"]):
-                decoded = decode_y4m(bytes(payload))
-                if decoded is None:
-                    continue
-                w, h, frames = decoded
-                for t in range(0, len(frames), Y4M_SAMPLE_EVERY):
-                    f = frames[t].astype(np.int64)
-                    yp, up, vp = f[0], f[1], f[2]
-                    out.append(
-                        (
-                            int(aid), w, h, len(frames), t,
-                            int(yp.sum()), int((yp * yp).sum()),
-                            int(up.sum()), int(vp.sum()),
-                            int(yp[0, :].sum()),
-                        )
-                    )
-            yield pd.DataFrame(
-                out,
-                columns=[
-                    "asset_id", "width", "height", "n_frames", "frame_idx",
-                    "sum_y", "ssq_y", "sum_u", "sum_v", "row0_y_sum",
-                ],
+    def rows_of(aid, payload):
+        decoded = decode_y4m(bytes(payload))
+        if decoded is None:
+            return
+        w, h, frames = decoded
+        for t in range(0, len(frames), Y4M_SAMPLE_EVERY):
+            f = frames[t].astype(np.int64)
+            yp, up, vp = f[0], f[1], f[2]
+            yield (
+                int(aid), w, h, len(frames), t,
+                int(yp.sum()), int((yp * yp).sum()),
+                int(up.sum()), int(vp.sum()),
+                int(yp[0, :].sum()),
             )
 
     media = synth_y4m_media(spark).select("asset_id", "payload")
-    per_frame = media.mapInPandas(batches, _Y4M_FRAME_SCHEMA)
+    per_frame = row_lane(media, rows_of, _Y4M_FRAME_SCHEMA)
     return (
         per_frame.groupBy("asset_id")
         .agg(
@@ -3080,37 +2828,26 @@ def mm_audio_silence_trim(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     import numpy as np
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        out = []
-        for pdf in it:
-            for aid, payload in zip(pdf["asset_id"], pdf["payload"]):
-                s = _wav_read_samples(bytes(payload))
-                if s is None:
-                    continue
-                loud = np.flatnonzero(np.abs(s) > SILENCE_EPS)
-                if len(loud):
-                    first, last = int(loud[0]), int(loud[-1])
-                    span = s[first : last + 1]
-                    out.append(
-                        (
-                            int(aid), len(s), first, last,
-                            last - first + 1,
-                            int((span * span).sum()),
-                        )
-                    )
-                else:
-                    out.append((int(aid), len(s), -1, -1, 0, 0))
-        yield pd.DataFrame(
-            out,
-            columns=[
-                "asset_id", "n_samples", "first_loud", "last_loud",
-                "trimmed_len", "trimmed_ssq",
-            ],
-        )
+    def rows_of(aid, payload):
+        s = _wav_read_samples(bytes(payload))
+        if s is None:
+            return
+        loud = np.flatnonzero(np.abs(s) > SILENCE_EPS)
+        if len(loud):
+            first, last = int(loud[0]), int(loud[-1])
+            span = s[first : last + 1]
+            yield (
+                int(aid), len(s), first, last,
+                last - first + 1,
+                int((span * span).sum()),
+            )
+        else:
+            yield (int(aid), len(s), -1, -1, 0, 0)
 
     media = synth_padded_wav_media(spark).select("asset_id", "payload")
-    return media.mapInPandas(
-        batches,
+    return row_lane(
+        media,
+        rows_of,
         "asset_id bigint, n_samples bigint, first_loud bigint, "
         "last_loud bigint, trimmed_len bigint, trimmed_ssq bigint",
     ).orderBy("asset_id")
@@ -3181,33 +2918,25 @@ def mm_video_scene_cuts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     import numpy as np
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        out = []
-        for pdf in it:
-            for aid, payload in zip(pdf["asset_id"], pdf["payload"]):
-                decoded = decode_y4m(bytes(payload))
-                if decoded is None:
-                    continue
-                w, h, frames = decoded
-                tau = SCENE_CUT_TAU_PER_PX * w * h
-                for t in range(1, len(frames)):
-                    sad = int(
-                        np.abs(
-                            frames[t][0].astype(np.int64)
-                            - frames[t - 1][0].astype(np.int64)
-                        ).sum()
-                    )
-                    out.append(
-                        (int(aid), len(frames), t, sad, int(sad > tau))
-                    )
-        yield pd.DataFrame(
-            out,
-            columns=["asset_id", "n_frames", "t", "sad", "is_cut"],
-        )
+    def rows_of(aid, payload):
+        decoded = decode_y4m(bytes(payload))
+        if decoded is None:
+            return
+        w, h, frames = decoded
+        tau = SCENE_CUT_TAU_PER_PX * w * h
+        for t in range(1, len(frames)):
+            sad = int(
+                np.abs(
+                    frames[t][0].astype(np.int64)
+                    - frames[t - 1][0].astype(np.int64)
+                ).sum()
+            )
+            yield (int(aid), len(frames), t, sad, int(sad > tau))
 
     media = synth_scene_media(spark).select("asset_id", "payload")
-    pairs = media.mapInPandas(
-        batches,
+    pairs = row_lane(
+        media,
+        rows_of,
         "asset_id bigint, n_frames int, t int, sad bigint, is_cut int",
     )
     return (
@@ -3322,80 +3051,69 @@ def mm_video_motion_estimate(
     radius = MOTION_RADIUS
     blk = MOTION_BLOCK
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        out = []
-        for pdf in it:
-            for aid, payload in zip(pdf["asset_id"], pdf["payload"]):
-                decoded = decode_y4m(bytes(payload))
-                if decoded is None:
-                    continue
-                w, h, frames = decoded
-                if w % blk or h % blk:
-                    continue
-                nbx, nby = w // blk, h // blk
-                planes = [f[0].astype(np.int64) for f in frames]
-                for t in range(1, len(planes)):
-                    cur, prev = planes[t], planes[t - 1]
-                    # best[key] per block, key = sad*25 + (dy+r)*5
-                    # + (dx+r): lexicographic (sad, dy, dx) argmin.
-                    best = None
-                    second = None
-                    for dy in range(-radius, radius + 1):
-                        for dx in range(-radius, radius + 1):
-                            ref = np.roll(prev, (-dy, -dx), (0, 1))
-                            sad = (
-                                np.abs(cur - ref)
-                                .reshape(nby, blk, nbx, blk)
-                                .sum((1, 3))
-                            )
-                            key = sad * (
-                                (2 * radius + 1) ** 2
-                            ) + (dy + radius) * (2 * radius + 1) + (
-                                dx + radius
-                            )
-                            if best is None:
-                                best = key
-                                second = np.full_like(sad, 2**62)
-                            else:
-                                second = np.where(
-                                    key < best,
-                                    # old best's SAD becomes runner-up
-                                    best // ((2 * radius + 1) ** 2),
-                                    np.minimum(
-                                        second,
-                                        key // ((2 * radius + 1) ** 2),
-                                    ),
-                                )
-                                best = np.minimum(best, key)
-                    span = (2 * radius + 1) ** 2
-                    for by in range(nby):
-                        for bx in range(nbx):
-                            k = int(best[by, bx])
-                            out.append(
-                                (
-                                    int(aid),
-                                    t,
-                                    by,
-                                    bx,
-                                    (k % (2 * radius + 1)) - radius,
-                                    ((k // (2 * radius + 1)) % (
-                                        2 * radius + 1
-                                    )) - radius,
-                                    k // span,
-                                    int(second[by, bx]),
-                                )
-                            )
-        yield pd.DataFrame(
-            out,
-            columns=[
-                "asset_id", "frame_idx", "block_row", "block_col",
-                "mv_dx", "mv_dy", "best_sad", "second_sad",
-            ],
-        )
+    def rows_of(aid, payload):
+        decoded = decode_y4m(bytes(payload))
+        if decoded is None:
+            return
+        w, h, frames = decoded
+        if w % blk or h % blk:
+            return
+        nbx, nby = w // blk, h // blk
+        planes = [f[0].astype(np.int64) for f in frames]
+        for t in range(1, len(planes)):
+            cur, prev = planes[t], planes[t - 1]
+            # best[key] per block, key = sad*25 + (dy+r)*5
+            # + (dx+r): lexicographic (sad, dy, dx) argmin.
+            best = None
+            second = None
+            for dy in range(-radius, radius + 1):
+                for dx in range(-radius, radius + 1):
+                    ref = np.roll(prev, (-dy, -dx), (0, 1))
+                    sad = (
+                        np.abs(cur - ref)
+                        .reshape(nby, blk, nbx, blk)
+                        .sum((1, 3))
+                    )
+                    key = sad * (
+                        (2 * radius + 1) ** 2
+                    ) + (dy + radius) * (2 * radius + 1) + (
+                        dx + radius
+                    )
+                    if best is None:
+                        best = key
+                        second = np.full_like(sad, 2**62)
+                    else:
+                        second = np.where(
+                            key < best,
+                            # old best's SAD becomes runner-up
+                            best // ((2 * radius + 1) ** 2),
+                            np.minimum(
+                                second,
+                                key // ((2 * radius + 1) ** 2),
+                            ),
+                        )
+                        best = np.minimum(best, key)
+            span = (2 * radius + 1) ** 2
+            for by in range(nby):
+                for bx in range(nbx):
+                    k = int(best[by, bx])
+                    yield (
+                        int(aid),
+                        t,
+                        by,
+                        bx,
+                        (k % (2 * radius + 1)) - radius,
+                        ((k // (2 * radius + 1)) % (
+                            2 * radius + 1
+                        )) - radius,
+                        k // span,
+                        int(second[by, bx]),
+                    )
 
     media = synth_motion_media(spark).select("asset_id", "payload")
-    return media.mapInPandas(
-        batches,
+    return row_lane(
+        media,
+        rows_of,
         "asset_id bigint, frame_idx int, block_row int, block_col int,"
         " mv_dx int, mv_dy int, best_sad bigint, second_sad bigint",
     ).orderBy("asset_id", "frame_idx", "block_row", "block_col")
@@ -3667,34 +3385,21 @@ def mm_image_decode_jpeg_420(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     import numpy as np
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        out = []
-        for pdf in it:
-            for aid, payload in zip(pdf["asset_id"], pdf["payload"]):
-                planes = decode_jpeg_color(bytes(payload))
-                if planes is None:
-                    continue
-                px = planes.astype(np.int64)
-                h, w = px.shape[1], px.shape[2]
-                out.append(
-                    (
-                        int(aid), w, h, (h // 16) * (w // 16),
-                        int(px[0].sum()), int(px[1].sum()),
-                        int(px[2].sum()),
-                        int(px[0][0, :].sum()), int(px[1][0, :].sum()),
-                    )
-                )
-        yield pd.DataFrame(
-            out,
-            columns=[
-                "asset_id", "width", "height", "n_mcus",
-                "sum_y", "sum_cb", "sum_cr",
-                "row0_y_sum", "row0_cb_sum",
-            ],
+    def rows_of(aid, payload):
+        planes = decode_jpeg_color(bytes(payload))
+        if planes is None:
+            return
+        px = planes.astype(np.int64)
+        h, w = px.shape[1], px.shape[2]
+        yield (
+            int(aid), w, h, (h // 16) * (w // 16),
+            int(px[0].sum()), int(px[1].sum()),
+            int(px[2].sum()),
+            int(px[0][0, :].sum()), int(px[1][0, :].sum()),
         )
 
     media = synth_jpeg_420_media(spark).select("asset_id", "payload")
-    return media.mapInPandas(batches, _JPEG_420_STATS_SCHEMA).orderBy(
+    return row_lane(media, rows_of, _JPEG_420_STATS_SCHEMA).orderBy(
         "asset_id"
     )
 
@@ -3720,33 +3425,21 @@ def mm_image_decode_jpeg_color(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     import numpy as np
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        out = []
-        for pdf in it:
-            for aid, payload in zip(pdf["asset_id"], pdf["payload"]):
-                planes = decode_jpeg_color(bytes(payload))
-                if planes is None:
-                    continue
-                px = planes.astype(np.int64)
-                h, w = px.shape[1], px.shape[2]
-                out.append(
-                    (
-                        int(aid), w, h, (h // 8) * (w // 8),
-                        int(px[0].sum()), int(px[1].sum()),
-                        int(px[2].sum()), int((px[0] * px[0]).sum()),
-                        int(px[0][0, :].sum()),
-                    )
-                )
-        yield pd.DataFrame(
-            out,
-            columns=[
-                "asset_id", "width", "height", "n_blocks",
-                "sum_y", "sum_cb", "sum_cr", "ssq_y", "row0_y_sum",
-            ],
+    def rows_of(aid, payload):
+        planes = decode_jpeg_color(bytes(payload))
+        if planes is None:
+            return
+        px = planes.astype(np.int64)
+        h, w = px.shape[1], px.shape[2]
+        yield (
+            int(aid), w, h, (h // 8) * (w // 8),
+            int(px[0].sum()), int(px[1].sum()),
+            int(px[2].sum()), int((px[0] * px[0]).sum()),
+            int(px[0][0, :].sum()),
         )
 
     media = synth_jpeg_color_media(spark).select("asset_id", "payload")
-    return media.mapInPandas(batches, _JPEG_COLOR_STATS_SCHEMA).orderBy(
+    return row_lane(media, rows_of, _JPEG_COLOR_STATS_SCHEMA).orderBy(
         "asset_id"
     )
 
@@ -3787,35 +3480,23 @@ def mm_image_decode_jpeg(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     import numpy as np
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        out = []
-        for pdf in it:
-            for aid, payload in zip(pdf["asset_id"], pdf["payload"]):
-                img = decode_jpeg_gray(bytes(payload))
-                if img is None:
-                    continue
-                px = img.astype(np.int64)
-                out.append(
-                    (
-                        int(aid),
-                        img.shape[1],
-                        img.shape[0],
-                        (img.shape[0] // 8) * (img.shape[1] // 8),
-                        int(px.sum()),
-                        int((px * px).sum()),
-                        int(px[0, :].sum()),
-                    )
-                )
-        yield pd.DataFrame(
-            out,
-            columns=[
-                "asset_id", "width", "height", "n_blocks",
-                "sum_px", "ssq_px", "row0_sum",
-            ],
+    def rows_of(aid, payload):
+        img = decode_jpeg_gray(bytes(payload))
+        if img is None:
+            return
+        px = img.astype(np.int64)
+        yield (
+            int(aid),
+            img.shape[1],
+            img.shape[0],
+            (img.shape[0] // 8) * (img.shape[1] // 8),
+            int(px.sum()),
+            int((px * px).sum()),
+            int(px[0, :].sum()),
         )
 
     media = synth_jpeg_media(spark).select("asset_id", "payload")
-    return media.mapInPandas(batches, _JPEG_STATS_SCHEMA).orderBy("asset_id")
+    return row_lane(media, rows_of, _JPEG_STATS_SCHEMA).orderBy("asset_id")
 
 
 # --- IMA-ADPCM audio (WAV format tag 0x11) ---------------------------
@@ -3999,29 +3680,22 @@ def mm_audio_adpcm_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     asset cross the Arrow boundary.
     """
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            out = []
-            for aid, payload in zip(pdf["asset_id"], pdf["payload"]):
-                s = decode_wav_ima_adpcm(bytes(payload))
-                if s is None:
-                    continue
-                out.append(
-                    (
-                        int(aid),
-                        len(s),
-                        sum(s),
-                        sum(v * v for v in s),
-                    )
-                )
-            yield pd.DataFrame(
-                out, columns=["asset_id", "n_samples", "s_sum", "energy"]
-            )
+    def rows_of(aid, payload):
+        s = decode_wav_ima_adpcm(bytes(payload))
+        if s is None:
+            return
+        yield (
+            int(aid),
+            len(s),
+            sum(s),
+            sum(v * v for v in s),
+        )
 
     media = synth_adpcm_media(spark).select("asset_id", "payload")
     return (
-        media.mapInPandas(
-            batches,
+        row_lane(
+            media,
+            rows_of,
             "asset_id bigint, n_samples bigint, s_sum bigint, "
             "energy bigint",
         )
@@ -4181,79 +3855,69 @@ def mm_decode_router(spark: SparkSession, sf_dir: str) -> DataFrame:
     per-type rollup is a codegen aggregate.
     """
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
+    import numpy as np
 
-        from postgres_s3_etl_spark.operators.flac_codec import decode_flac
+    from postgres_s3_etl_spark.operators.flac_codec import decode_flac
 
-        for pdf in it:
-            out = []
-            for aid, mt, payload in zip(
-                pdf["asset_id"], pdf["media_type"], pdf["payload"]
-            ):
-                p = bytes(payload)
-                decoded, units, main = 0, 0, 0
-                if p[:2] == b"BM":
-                    img = decode_bmp24(p)
-                    if img is not None:
-                        decoded = 1
-                        units = img.shape[0] * img.shape[1]
-                        main = int(img.astype(np.int64).sum())
-                elif p[:2] == b"\xff\xd8":
-                    # one arm for gray, 4:4:4 AND 4:2:0 — the decoder
-                    # returns full-res planes; units/main read plane 0
-                    # (the luma), identical for every JPEG layout
-                    pl = decode_jpeg_baseline(p)
-                    if pl is not None:
-                        decoded = 1
-                        units = pl.shape[1] * pl.shape[2]
-                        main = int(pl[0].astype(np.int64).sum())
-                elif p[:4] == b"RIFF" and p[8:12] == b"WAVE":
-                    wins = decode_wav_windows_exact(p, AUDIO_WINDOW_MS)
-                    if wins is not None:
-                        decoded = 1
-                        units = sum(n for n, _, _ in wins)
-                        main = sum(q for _, _, q in wins)
-                    else:
-                        # round-11: non-PCM RIFF -> the IMA-ADPCM arm
-                        s = decode_wav_ima_adpcm(p)
-                        if s is not None:
-                            decoded = 1
-                            units = len(s)
-                            main = sum(v * v for v in s)
-                elif p[:4] == b"fLaC":
-                    # round-12: lossless-compressed audio — real FLAC
-                    # subset decode (CRC-8/16 + PCM-MD5 verified)
-                    s = decode_flac(p)
-                    if s is not None:
-                        decoded = 1
-                        units = len(s)
-                        main = sum(v * v for v in s)
-                elif p[:10] == b"YUV4MPEG2 ":
-                    dec = decode_y4m(p)
-                    if dec is not None:
-                        w, h, frames = dec
-                        decoded = 1
-                        units = len(frames) * w * h
-                        main = int(
-                            sum(
-                                int(f[0].astype(np.int64).sum())
-                                for f in frames
-                            )
-                        )
-                out.append((int(aid), str(mt), decoded, units, main))
-            yield pd.DataFrame(
-                out,
-                columns=[
-                    "asset_id", "media_type", "decoded", "units", "main",
-                ],
-            )
+    def rows_of(aid, mt, payload):
+        p = bytes(payload)
+        decoded, units, main = 0, 0, 0
+        if p[:2] == b"BM":
+            img = decode_bmp24(p)
+            if img is not None:
+                decoded = 1
+                units = img.shape[0] * img.shape[1]
+                main = int(img.astype(np.int64).sum())
+        elif p[:2] == b"\xff\xd8":
+            # one arm for gray, 4:4:4 AND 4:2:0 — the decoder
+            # returns full-res planes; units/main read plane 0
+            # (the luma), identical for every JPEG layout
+            pl = decode_jpeg_baseline(p)
+            if pl is not None:
+                decoded = 1
+                units = pl.shape[1] * pl.shape[2]
+                main = int(pl[0].astype(np.int64).sum())
+        elif p[:4] == b"RIFF" and p[8:12] == b"WAVE":
+            wins = decode_wav_windows_exact(p, AUDIO_WINDOW_MS)
+            if wins is not None:
+                decoded = 1
+                units = sum(n for n, _, _ in wins)
+                main = sum(q for _, _, q in wins)
+            else:
+                # round-11: non-PCM RIFF -> the IMA-ADPCM arm
+                s = decode_wav_ima_adpcm(p)
+                if s is not None:
+                    decoded = 1
+                    units = len(s)
+                    main = sum(v * v for v in s)
+        elif p[:4] == b"fLaC":
+            # round-12: lossless-compressed audio — real FLAC
+            # subset decode (CRC-8/16 + PCM-MD5 verified)
+            s = decode_flac(p)
+            if s is not None:
+                decoded = 1
+                units = len(s)
+                main = sum(v * v for v in s)
+        elif p[:10] == b"YUV4MPEG2 ":
+            dec = decode_y4m(p)
+            if dec is not None:
+                w, h, frames = dec
+                decoded = 1
+                units = len(frames) * w * h
+                main = int(
+                    sum(
+                        int(f[0].astype(np.int64).sum())
+                        for f in frames
+                    )
+                )
+        yield (int(aid), str(mt), decoded, units, main)
 
     media = synth_mixed_media(spark).select(
         "asset_id", "media_type", "payload"
     )
-    per_asset = media.mapInPandas(
-        batches,
+    per_asset = row_lane(
+        media,
+        rows_of,
         "asset_id bigint, media_type string, decoded int, "
         "units bigint, main bigint",
     )
@@ -4418,33 +4082,21 @@ def mm_image_decode_tga(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     import numpy as np
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        out = []
-        for pdf in it:
-            for aid, payload in zip(pdf["asset_id"], pdf["payload"]):
-                img = decode_tga(bytes(payload))
-                if img is None:
-                    continue
-                px = img.astype(np.int64)
-                h, w = img.shape[0], img.shape[1]
-                out.append(
-                    (
-                        int(aid), w, h, h * w,
-                        int(px[:, :, 0].sum()), int(px[:, :, 1].sum()),
-                        int(px[:, :, 2].sum()),
-                        int(px[0, :, 0].sum()),
-                    )
-                )
-        yield pd.DataFrame(
-            out,
-            columns=[
-                "asset_id", "width", "height", "n_px",
-                "sum_b", "sum_g", "sum_r", "row0_b_sum",
-            ],
+    def rows_of(aid, payload):
+        img = decode_tga(bytes(payload))
+        if img is None:
+            return
+        px = img.astype(np.int64)
+        h, w = img.shape[0], img.shape[1]
+        yield (
+            int(aid), w, h, h * w,
+            int(px[:, :, 0].sum()), int(px[:, :, 1].sum()),
+            int(px[:, :, 2].sum()),
+            int(px[0, :, 0].sum()),
         )
 
     media = synth_tga_media(spark).select("asset_id", "payload")
-    return media.mapInPandas(batches, _TGA_STATS_SCHEMA).orderBy(
+    return row_lane(media, rows_of, _TGA_STATS_SCHEMA).orderBy(
         "asset_id"
     )
 
@@ -4590,31 +4242,19 @@ def mm_audio_decode_aiff(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     import numpy as np
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        out = []
-        for pdf in it:
-            for aid, payload in zip(pdf["asset_id"], pdf["payload"]):
-                dec = decode_aiff(bytes(payload))
-                if dec is None:
-                    continue
-                rate, s = dec
-                out.append(
-                    (
-                        int(aid), rate, len(s),
-                        int(s.sum()), int((s * s).sum()),
-                        int(s.min()), int(s.max()),
-                    )
-                )
-        yield pd.DataFrame(
-            out,
-            columns=[
-                "asset_id", "rate_hz", "n_samples",
-                "sum_s", "ssq_s", "min_s", "max_s",
-            ],
+    def rows_of(aid, payload):
+        dec = decode_aiff(bytes(payload))
+        if dec is None:
+            return
+        rate, s = dec
+        yield (
+            int(aid), rate, len(s),
+            int(s.sum()), int((s * s).sum()),
+            int(s.min()), int(s.max()),
         )
 
     media = synth_aiff_media(spark).select("asset_id", "payload")
-    return media.mapInPandas(batches, _AIFF_STATS_SCHEMA).orderBy(
+    return row_lane(media, rows_of, _AIFF_STATS_SCHEMA).orderBy(
         "asset_id"
     )
 
@@ -5144,35 +4784,23 @@ def mm_image_decode_jpeg_progressive_color(
     """
     import numpy as np
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        out = []
-        for pdf in it:
-            for aid, payload in zip(pdf["asset_id"], pdf["payload"]):
-                planes = decode_jpeg_progressive(bytes(payload))
-                if planes is None or planes.shape[0] != 3:
-                    continue
-                px = planes.astype(np.int64)
-                h, w = px.shape[1], px.shape[2]
-                out.append(
-                    (
-                        int(aid), w, h, (h // 8) * (w // 8),
-                        int(px[0].sum()), int(px[1].sum()),
-                        int(px[2].sum()), int((px[0] * px[0]).sum()),
-                        int(px[0][0, :].sum()),
-                    )
-                )
-        yield pd.DataFrame(
-            out,
-            columns=[
-                "asset_id", "width", "height", "n_blocks",
-                "sum_y", "sum_cb", "sum_cr", "ssq_y", "row0_y_sum",
-            ],
+    def rows_of(aid, payload):
+        planes = decode_jpeg_progressive(bytes(payload))
+        if planes is None or planes.shape[0] != 3:
+            return
+        px = planes.astype(np.int64)
+        h, w = px.shape[1], px.shape[2]
+        yield (
+            int(aid), w, h, (h // 8) * (w // 8),
+            int(px[0].sum()), int(px[1].sum()),
+            int(px[2].sum()), int((px[0] * px[0]).sum()),
+            int(px[0][0, :].sum()),
         )
 
     media = synth_jpeg_progressive_color_media(spark).select(
         "asset_id", "payload"
     )
-    return media.mapInPandas(batches, _JPEG_COLOR_STATS_SCHEMA).orderBy(
+    return row_lane(media, rows_of, _JPEG_COLOR_STATS_SCHEMA).orderBy(
         "asset_id"
     )
 
@@ -5195,34 +4823,22 @@ def mm_image_decode_jpeg_progressive(
     """
     import numpy as np
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        out = []
-        for pdf in it:
-            for aid, payload in zip(pdf["asset_id"], pdf["payload"]):
-                img = decode_jpeg_progressive_gray(bytes(payload))
-                if img is None:
-                    continue
-                px = img.astype(np.int64)
-                out.append(
-                    (
-                        int(aid), img.shape[1], img.shape[0],
-                        (img.shape[0] // 8) * (img.shape[1] // 8),
-                        int(px.sum()), int((px * px).sum()),
-                        int(px[0, :].sum()),
-                    )
-                )
-        yield pd.DataFrame(
-            out,
-            columns=[
-                "asset_id", "width", "height", "n_blocks",
-                "sum_px", "ssq_px", "row0_sum",
-            ],
+    def rows_of(aid, payload):
+        img = decode_jpeg_progressive_gray(bytes(payload))
+        if img is None:
+            return
+        px = img.astype(np.int64)
+        yield (
+            int(aid), img.shape[1], img.shape[0],
+            (img.shape[0] // 8) * (img.shape[1] // 8),
+            int(px.sum()), int((px * px).sum()),
+            int(px[0, :].sum()),
         )
 
     media = synth_jpeg_progressive_media(spark).select(
         "asset_id", "payload"
     )
-    return media.mapInPandas(batches, _JPEG_STATS_SCHEMA).orderBy(
+    return row_lane(media, rows_of, _JPEG_STATS_SCHEMA).orderBy(
         "asset_id"
     )
 
@@ -5457,32 +5073,20 @@ def mm_image_decode_gif(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     import numpy as np
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        out = []
-        for pdf in it:
-            for aid, payload in zip(pdf["asset_id"], pdf["payload"]):
-                img = decode_gif_gray(bytes(payload))
-                if img is None:
-                    continue
-                px = img.astype(np.int64)
-                out.append(
-                    (
-                        int(aid), img.shape[1], img.shape[0],
-                        img.shape[0] * img.shape[1],
-                        int(px.sum()), int((px * px).sum()),
-                        int(px[0, :].sum()),
-                    )
-                )
-        yield pd.DataFrame(
-            out,
-            columns=[
-                "asset_id", "width", "height", "n_px",
-                "sum_px", "ssq_px", "row0_sum",
-            ],
+    def rows_of(aid, payload):
+        img = decode_gif_gray(bytes(payload))
+        if img is None:
+            return
+        px = img.astype(np.int64)
+        yield (
+            int(aid), img.shape[1], img.shape[0],
+            img.shape[0] * img.shape[1],
+            int(px.sum()), int((px * px).sum()),
+            int(px[0, :].sum()),
         )
 
     media = synth_gif_media(spark).select("asset_id", "payload")
-    return media.mapInPandas(batches, _GIF_STATS_SCHEMA).orderBy("asset_id")
+    return row_lane(media, rows_of, _GIF_STATS_SCHEMA).orderBy("asset_id")
 
 
 #: Perceptual-hash dedup constants. 9x8 box grid -> 64-bit dHash
@@ -5593,43 +5197,37 @@ def _phash_pairs(spark: SparkSession) -> DataFrame:
     join → bit_count verify at PHASH_MAX_HAMMING."""
     import numpy as np
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            out = []
-            for aid, payload in zip(pdf["asset_id"], pdf["payload"]):
-                img = decode_pgm(bytes(payload))
-                if img is None:
-                    continue
-                h, w = img.shape
-                if w < PHASH_GRID_X or h < PHASH_GRID_Y:
-                    continue
-                gxi = (np.arange(w) * PHASH_GRID_X) // w
-                gyi = (np.arange(h) * PHASH_GRID_Y) // h
-                cell = gyi[:, None] * PHASH_GRID_X + gxi[None, :]
-                n_cells = PHASH_GRID_X * PHASH_GRID_Y
-                sums = np.bincount(
-                    cell.ravel(),
-                    weights=img.astype(np.int64).ravel(),
-                    minlength=n_cells,
-                ).astype(np.int64)
-                cnts = np.bincount(cell.ravel(), minlength=n_cells)
-                means = (sums // cnts).reshape(
-                    PHASH_GRID_Y, PHASH_GRID_X
-                )
-                rows = []
-                for gy in range(PHASH_GRID_Y):
-                    byte = 0
-                    for cx in range(PHASH_GRID_X - 1):
-                        if means[gy, cx + 1] > means[gy, cx]:
-                            byte |= 1 << cx
-                    rows.append(int(byte))
-                out.append((int(aid), rows))
-            yield pd.DataFrame(out, columns=["asset_id", "rows"])
+    def rows_of(aid, payload):
+        img = decode_pgm(bytes(payload))
+        if img is None:
+            return
+        h, w = img.shape
+        if w < PHASH_GRID_X or h < PHASH_GRID_Y:
+            return
+        gxi = (np.arange(w) * PHASH_GRID_X) // w
+        gyi = (np.arange(h) * PHASH_GRID_Y) // h
+        cell = gyi[:, None] * PHASH_GRID_X + gxi[None, :]
+        n_cells = PHASH_GRID_X * PHASH_GRID_Y
+        sums = np.bincount(
+            cell.ravel(),
+            weights=img.astype(np.int64).ravel(),
+            minlength=n_cells,
+        ).astype(np.int64)
+        cnts = np.bincount(cell.ravel(), minlength=n_cells)
+        means = (sums // cnts).reshape(
+            PHASH_GRID_Y, PHASH_GRID_X
+        )
+        rows = []
+        for gy in range(PHASH_GRID_Y):
+            byte = 0
+            for cx in range(PHASH_GRID_X - 1):
+                if means[gy, cx + 1] > means[gy, cx]:
+                    byte |= 1 << cx
+            rows.append(int(byte))
+        yield (int(aid), rows)
 
     media = synth_phash_media(spark).select("asset_id", "payload")
-    hashed = media.mapInPandas(
-        batches, "asset_id bigint, rows array<int>"
-    )
+    hashed = row_lane(media, rows_of, "asset_id bigint, rows array<int>")
     chunks = hashed.select(
         "asset_id",
         "rows",
@@ -5856,16 +5454,7 @@ def mm_image_ssim_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
                         }
                     )
                 )
-            yield (
-                pd.concat(out, ignore_index=True)
-                if out
-                else pd.DataFrame(
-                    columns=["asset_id", "x", "y", "g"]
-                ).astype(
-                    {"asset_id": "int64", "x": "int32", "y": "int32",
-                     "g": "int64"}
-                )
-            )
+            yield pd.concat(out, ignore_index=True) if out else pd.DataFrame()
 
     media = synth_phash_media(spark).select("asset_id", "payload")
     px = media.mapInPandas(
@@ -6110,45 +5699,39 @@ def mm_video_phash_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     import numpy as np
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            out = []
-            for aid, payload in zip(pdf["asset_id"], pdf["payload"]):
-                dec = decode_y4m(bytes(payload))
-                if dec is None:
-                    continue
-                w, h, frames = dec
-                if w < PHASH_GRID_X or h < PHASH_GRID_Y:
-                    continue
-                gxi = (np.arange(w) * PHASH_GRID_X) // w
-                gyi = (np.arange(h) * PHASH_GRID_Y) // h
-                cell = gyi[:, None] * PHASH_GRID_X + gxi[None, :]
-                n_cells = PHASH_GRID_X * PHASH_GRID_Y
-                cnts = np.bincount(cell.ravel(), minlength=n_cells)
-                for t, fr in enumerate(frames):
-                    luma = fr[0].astype(np.int64)
-                    sums = np.bincount(
-                        cell.ravel(), weights=luma.ravel(),
-                        minlength=n_cells,
-                    ).astype(np.int64)
-                    means = (sums // cnts).reshape(
-                        PHASH_GRID_Y, PHASH_GRID_X
-                    )
-                    rows = []
-                    for gy in range(PHASH_GRID_Y):
-                        byte = 0
-                        for cx in range(PHASH_GRID_X - 1):
-                            if means[gy, cx + 1] > means[gy, cx]:
-                                byte |= 1 << cx
-                        rows.append(int(byte))
-                    out.append((int(aid), t, rows))
-            yield pd.DataFrame(
-                out, columns=["asset_id", "frame", "rows"]
+    def rows_of(aid, payload):
+        dec = decode_y4m(bytes(payload))
+        if dec is None:
+            return
+        w, h, frames = dec
+        if w < PHASH_GRID_X or h < PHASH_GRID_Y:
+            return
+        gxi = (np.arange(w) * PHASH_GRID_X) // w
+        gyi = (np.arange(h) * PHASH_GRID_Y) // h
+        cell = gyi[:, None] * PHASH_GRID_X + gxi[None, :]
+        n_cells = PHASH_GRID_X * PHASH_GRID_Y
+        cnts = np.bincount(cell.ravel(), minlength=n_cells)
+        for t, fr in enumerate(frames):
+            luma = fr[0].astype(np.int64)
+            sums = np.bincount(
+                cell.ravel(), weights=luma.ravel(),
+                minlength=n_cells,
+            ).astype(np.int64)
+            means = (sums // cnts).reshape(
+                PHASH_GRID_Y, PHASH_GRID_X
             )
+            rows = []
+            for gy in range(PHASH_GRID_Y):
+                byte = 0
+                for cx in range(PHASH_GRID_X - 1):
+                    if means[gy, cx + 1] > means[gy, cx]:
+                        byte |= 1 << cx
+                rows.append(int(byte))
+            yield (int(aid), t, rows)
 
     media = synth_vphash_media(spark).select("asset_id", "payload")
-    hashes = media.mapInPandas(
-        batches, "asset_id bigint, frame int, rows array<int>"
+    hashes = row_lane(
+        media, rows_of, "asset_id bigint, frame int, rows array<int>"
     ).localCheckpoint()
     buckets = hashes.select(
         "asset_id",

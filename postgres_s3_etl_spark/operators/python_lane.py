@@ -1,7 +1,17 @@
-"""Parallelism pinning for per-group / per-row-compute-bound stages.
+"""The Python lanes: the one per-row runner, and parallelism pinning
+for per-group / per-row-compute-bound stages.
 
-Two situations defeat Spark's byte-based parallelism heuristics, and
-both showed up as real 9-10x serializations in this repo:
+**Per-row lanes.** :func:`row_lane` is the one ``mapInPandas`` loop
+behind every per-row payload decode: the operator supplies only a
+function from one input row to its output tuples, written in the
+order of the output schema, so the schema is the one place the
+output columns are named. The runner yields one unlabelled pandas
+frame per Arrow batch (Spark assigns integer-labelled columns by
+position), so a lane holds at most one batch of output in memory.
+
+**Parallelism.** Two situations defeat Spark's byte-based
+parallelism heuristics, and both showed up as real 9-10x
+serializations in this repo:
 
 1. **Grouped Python transforms** (``groupBy(...).applyInPandas``,
    ``cogroup(...).applyInPandas``): the cost driver is per-GROUP
@@ -31,7 +41,41 @@ exchange for the pin).
 
 from __future__ import annotations
 
+from typing import Callable, Iterable, Iterator
+
+import pandas as pd
 from pyspark.sql import DataFrame
+from pyspark.sql.types import StructType
+
+
+def row_lane(
+    df: DataFrame,
+    rows_of: Callable[..., Iterable[tuple]],
+    schema: StructType | str,
+) -> DataFrame:
+    """Run ``rows_of`` over every row of ``df`` in an Arrow-batched
+    ``mapInPandas`` lane.
+
+    ``rows_of(*row)`` receives the values of ``df``'s columns, in
+    order, and returns (or yields) that row's output tuples in
+    ``schema`` order; an empty return drops the row. A batch whose
+    tuples are all too short, or any tuple too long, fails the task
+    with Spark's ``RESULT_COLUMN_SCHEMA_MISMATCH``; pandas pads a
+    short tuple with nulls when others in its batch are full width,
+    so the width is ``rows_of``'s contract.
+    """
+
+    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in it:
+            yield pd.DataFrame(
+                [
+                    out
+                    for row in pdf.itertuples(index=False, name=None)
+                    for out in rows_of(*row)
+                ]
+            )
+
+    return df.mapInPandas(batches, schema)
 
 
 def repartition_for_grouped_python(df: DataFrame, *key_cols: str) -> DataFrame:

@@ -68,3 +68,23 @@ def test_check_correctness_rejects_unknown_names(monkeypatch, capsys):
     )
     assert check_correctness.main() == 2
     assert "nope_q" in capsys.readouterr().out
+
+
+def test_mapinpandas_only_in_the_lane_runner_and_ssim():
+    """Per-row Python lanes go through ``python_lane.row_lane``; the one
+    raw ``mapInPandas`` left is ``mm_image_ssim_pairs``' pixel lane,
+    which builds whole pandas frames with numpy."""
+    import ast
+    from pathlib import Path
+
+    pkg = Path(__file__).resolve().parents[1] / "postgres_s3_etl_spark"
+    sites = set()
+    for py in sorted(pkg.rglob("*.py")):
+        for top in ast.parse(py.read_text()).body:
+            for node in ast.walk(top):
+                if isinstance(node, ast.Attribute) and node.attr == "mapInPandas":
+                    sites.add((py.name, getattr(top, "name", None)))
+    assert sites == {
+        ("python_lane.py", "row_lane"),
+        ("multimodal.py", "mm_image_ssim_pairs"),
+    }, sorted(sites)

@@ -1,7 +1,10 @@
-"""Parallelism-pinning contract (operators/python_lane.py): grouped
-Python-lane transforms and compute-bound narrow stages must pin task
-parallelism to core count via the shared helper, and the pin must be
-a REPARTITION_BY_NUM exchange AQE cannot coalesce."""
+"""Python-lane contracts (operators/python_lane.py).
+
+Parallelism pinning: grouped Python-lane transforms and compute-bound
+narrow stages must pin task parallelism to core count via the shared
+helper, and the pin must be a REPARTITION_BY_NUM exchange AQE cannot
+coalesce. Per-row lanes: ``row_lane`` drops, expands and positions
+output rows as its docstring says."""
 
 from __future__ import annotations
 
@@ -101,3 +104,61 @@ def test_pq_subs_widened_on_one_file_scan(spark):
     wide_vecs = vecs.repartition(n, "vec_id")
     plan2 = _pq_subs(wide_vecs)._jdf.queryExecution().executedPlan().toString()
     assert plan2.count("REPARTITION_BY_NUM") == 1, plan2  # only our own
+
+
+def test_row_lane_drops_and_expands_rows(spark):
+    """Each input row yields 0, 1 or 2 output rows (id % 3 of them)
+    across a 3-partition frame: dropped rows vanish, expanded rows
+    all arrive."""
+    from postgres_s3_etl_spark.operators.python_lane import row_lane
+
+    df = spark.range(0, 12, numPartitions=3)
+
+    def rows_of(i):
+        return [(i, k) for k in range(i % 3)]
+
+    got = row_lane(df, rows_of, "id bigint, k int").collect()
+    assert sorted(tuple(r) for r in got) == [
+        (i, k) for i in range(12) for k in range(i % 3)
+    ]
+
+
+def test_row_lane_all_dropped_and_empty_input_give_no_rows(spark):
+    from postgres_s3_etl_spark.operators.python_lane import row_lane
+
+    df = spark.range(0, 12, numPartitions=3)
+    assert row_lane(df, lambda i: (), "id bigint").collect() == []
+    # the first partition (ids 0-3) drops every row, the others keep theirs
+    kept = row_lane(df, lambda i: [(i,)] if i >= 4 else [], "id bigint")
+    assert sorted(r.id for r in kept.collect()) == list(range(4, 12))
+    empty = spark.range(0, 0, numPartitions=3)
+    assert row_lane(empty, lambda i: [(i,)], "id bigint").collect() == []
+
+
+def test_row_lane_short_tuple_raises(spark):
+    import pytest
+
+    from postgres_s3_etl_spark.operators.python_lane import row_lane
+
+    df = spark.range(0, 4, numPartitions=2)
+    with pytest.raises(Exception, match="RESULT_COLUMN_SCHEMA_MISMATCH"):
+        row_lane(df, lambda i: [(i,)], "id bigint, k int").collect()
+
+
+def test_row_lane_assigns_fields_by_position(spark):
+    """``rows_of`` gets the input columns in order (binary as bytes)
+    and its string / array<int> / bigint fields land in the schema's
+    columns by position."""
+    from postgres_s3_etl_spark.operators.python_lane import row_lane
+
+    df = spark.createDataFrame(
+        [(i, bytearray(b"x" * i)) for i in range(5)], "id bigint, payload binary"
+    ).repartition(2)
+
+    def rows_of(i, payload):
+        yield (f"s{i}", [i, len(bytes(payload))], 2**40 + i)
+
+    got = row_lane(df, rows_of, "s string, a array<int>, b bigint").collect()
+    assert sorted(tuple(r) for r in got) == [
+        (f"s{i}", [i, i], 2**40 + i) for i in range(5)
+    ]

@@ -194,21 +194,6 @@ def test_multimodal_feature_extraction(spark):
     assert all(s.n_distinct_payloads == s.n_assets for s in stats)
 
 
-def test_multimodal_real_decode_is_stubbed(spark):
-    from postgres_s3_etl_spark.operators.multimodal import (
-        extract_features,
-        synth_media,
-    )
-    from py4j.protocol import Py4JJavaError
-
-    media = synth_media(spark, n=4)
-    with pytest.raises(Exception) as exc:
-        extract_features(media, decode_stub=False).collect()
-    assert "NotImplementedError" in str(exc.value) or isinstance(
-        exc.value, Py4JJavaError
-    )
-
-
 def test_multimodal_metadata_pruning_skips_decode(spark):
     """Filtering on metadata before extract_features must prune rows
     before the Python stage — decode never sees filtered assets."""
@@ -437,32 +422,6 @@ def test_wav_payloads_get_real_rms_not_digest(spark):
     assert got[(1, 0)] == 100  # stereo averaged to mono
     # Non-WAV fell back to the digest stub: 2 windows from duration.
     assert (2, 0) in got and (2, 1) in got and (2, 2) not in got
-
-
-def test_non_wav_without_stub_raises(spark):
-    import pytest
-    from pyspark.sql import Row
-
-    from postgres_s3_etl_spark.operators.multimodal import (
-        MEDIA_SCHEMA,
-        window_audio,
-    )
-
-    media = spark.createDataFrame(
-        [
-            Row(
-                asset_id=0,
-                media_type="audio",
-                width=0,
-                height=0,
-                duration_ms=1000,
-                payload=bytearray(b"mp3-ish-bytes"),
-            )
-        ],
-        MEDIA_SCHEMA,
-    )
-    with pytest.raises(Exception, match="NotImplementedError|ffmpeg"):
-        window_audio(media, decode_stub=False).collect()
 
 
 def test_stream_topk_users_equals_batch(spark):
